@@ -3,10 +3,19 @@
 Cluster form (north_rule):
 
     zip -r sparkfuse.zip sparkfuse
-    spark-submit --py-files sparkfuse.zip jobs/build_forest_job.py \
+    spark-submit --py-files sparkfuse.zip \
+        --conf spark.python.daemon.module=sparkfuse.daemon \
+        --conf spark.executorEnv.PYTHONPATH=sparkfuse.zip \
+        jobs/build_forest_job.py \
         --input  <parquet path | iceberg ident> \
         --output <forest parquet path> \
         --spec text --kind fuse --width 8 --shard-bits 9 --resume
+
+Run it from the directory holding sparkfuse.zip. The two ``--conf`` pairs
+(from ``sparkfuse.session.spark_conf_pairs``) fork the Python workers from
+``sparkfuse.daemon``, which the executor imports from that relative zip
+before any task has shipped it; without them the job runs on the stock
+daemon and every task re-reads Spark's archive indexes.
 
 In this sandbox the same job runs with master local[N]. --resume makes the
 job idempotent mid-build: already-persisted shards are skipped by anti-join

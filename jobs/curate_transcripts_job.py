@@ -4,11 +4,20 @@ Cluster form (north_star: the training-data pipeline over transcript
 tables, deployed like every other job here):
 
     python tools/make_pyfiles_zip.py sparkfuse.zip
-    spark-submit --py-files sparkfuse.zip jobs/curate_transcripts_job.py \
+    spark-submit --py-files sparkfuse.zip \
+        --conf spark.python.daemon.module=sparkfuse.daemon \
+        --conf spark.executorEnv.PYTHONPATH=sparkfuse.zip \
+        jobs/curate_transcripts_job.py \
         --input  <parquet path | iceberg ident> \
         --output <curated turns parquet path> \
         --bench-input <parquet of benchmark rows>  (optional) \
         --bench-text-col text --holdout-fraction 0.1 --ngram 13
+
+Run it from the directory holding sparkfuse.zip. The two ``--conf`` pairs
+(from ``sparkfuse.session.spark_conf_pairs``) fork the Python workers from
+``sparkfuse.daemon``, which the executor imports from that relative zip
+before any task has shipped it; without them the job runs on the stock
+daemon and every task re-reads Spark's archive indexes.
 
 Stages (sparkfuse.transcripts.curate_transcripts): exact conversation
 dedup by ordered-content digest → whole-conversation n-gram

@@ -10,6 +10,11 @@ spark-submit --py-files):
     spark-submit --master local[32] --py-files sparkfuse.zip ... \
         jobs/scaling_level_job.py --cores 32 --out level32.json
 
+Both run from the directory holding sparkfuse.zip: the conf pairs fork the
+Python workers from ``sparkfuse.daemon``, which the executor imports from
+the relative ``spark.executorEnv.PYTHONPATH=sparkfuse.zip`` before any task
+has shipped the zip.
+
 On a real cluster, --master local[N] becomes the cluster manager at N and
 4N executors; nothing in the measured jobs changes. ``bench.py --scaling``
 is the orchestrator that runs both levels and assembles

@@ -4,11 +4,20 @@ Cluster form (north_rule: mergeable sketch UDAFs, resumable from checkpoint
 with per-partition lineage + metrics, run via spark-submit --py-files):
 
     zip -r sparkfuse.zip sparkfuse
-    spark-submit --py-files sparkfuse.zip jobs/sketch_profile_job.py \
+    spark-submit --py-files sparkfuse.zip \
+        --conf spark.python.daemon.module=sparkfuse.daemon \
+        --conf spark.executorEnv.PYTHONPATH=sparkfuse.zip \
+        jobs/sketch_profile_job.py \
         --input <parquet path | iceberg ident> \
         --sink  <sketch-state parquet path> \
         --key-col conv_id --value-col text_len \
         --shard-bits 6 --resume
+
+Run it from the directory holding sparkfuse.zip. The two ``--conf`` pairs
+(from ``sparkfuse.session.spark_conf_pairs``) fork the Python workers from
+``sparkfuse.daemon``, which the executor imports from that relative zip
+before any task has shipped it; without them the job runs on the stock
+daemon and every task re-reads Spark's archive indexes.
 
 Builds HLL + CMS + Bloom + theta + Misra-Gries over the key column and
 t-digest + KLL over the value column as per-shard states in the sink; --resume makes a

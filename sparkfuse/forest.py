@@ -52,8 +52,8 @@ from sparkfuse.keys import dedup_keys, shard_column
 from sparkfuse.kernels import (
     FuseFilter,
     XorFilter,
-    build_fuse,
-    build_xor,
+    build_fuse_unique,
+    build_xor_unique,
     fuse_contains,
     xor_contains,
 )
@@ -119,17 +119,20 @@ def plan_shard_bits(
 
 
 def _build_one(keys_u64: np.ndarray, spec: ForestSpec):
+    """One shard's filter, payload, iterations, build seconds and distinct
+    key count (taken from the build's own dedup)."""
     t0 = time.perf_counter()
+    ukeys = np.unique(keys_u64)
     if spec.kind == "fuse":
-        filt, iterations = build_fuse(keys_u64, width=spec.width, arity=spec.arity)
+        filt, iterations = build_fuse_unique(ukeys, width=spec.width, arity=spec.arity)
         payload = save_fuse_bytes(filt)
     elif spec.kind == "xor":
-        filt, iterations = build_xor(keys_u64, width=spec.width)
+        filt, iterations = build_xor_unique(ukeys, width=spec.width)
         payload = save_xor_bytes(filt)
     else:
         raise ValueError(f"unknown filter kind {spec.kind!r}")
     dt = time.perf_counter() - t0
-    return filt, payload, iterations, dt
+    return filt, payload, iterations, dt, len(ukeys)
 
 
 def _kernel_factory(spec: ForestSpec):
@@ -138,13 +141,12 @@ def _kernel_factory(spec: ForestSpec):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = to_u64(pdf["key"].to_numpy())
         shard = int(pdf["shard"].iloc[0]) if "shard" in pdf else 0
-        nkeys = len(np.unique(keys))
         kspec = spec
         if "width" in pdf:  # per-shard width override (budgeted forests)
             from dataclasses import replace
 
             kspec = replace(spec, width=int(pdf["width"].iloc[0]))
-        filt, payload, iterations, dt = _build_one(keys, kspec)
+        filt, payload, iterations, dt, nkeys = _build_one(keys, kspec)
         return pd.DataFrame(
             {
                 "shard": [shard],
@@ -219,8 +221,7 @@ def build_forest_driver(
     """
     spec = ForestSpec(kind=kind, width=width, arity=arity, shard_bits=0)
     keys_u64 = to_u64(np.asarray(keys_i64, dtype=np.int64))
-    nkeys = len(np.unique(keys_u64))
-    filt, payload, iterations, dt = _build_one(keys_u64, spec)
+    filt, payload, iterations, dt, nkeys = _build_one(keys_u64, spec)
     return Forest(
         [
             {

@@ -323,9 +323,17 @@ def build_fuse(
     per-shard lineage column (C12). Scratch comes from ``workspace``
     (default: the process-global one, reused across builds — C5).
     """
+    return build_fuse_unique(np.unique(np.asarray(keys, dtype=np.uint64)), width,
+                             arity, workspace)
+
+
+def build_fuse_unique(
+    ukeys: np.ndarray, width: int = 8, arity: int = 3,
+    workspace: BuildWorkspace | None = None,
+) -> tuple[FuseFilter, int]:
+    """``build_fuse`` over sorted distinct u64 keys (``np.unique`` output)."""
     ws = workspace if workspace is not None else _DEFAULT_WS
     dtype = _dtype_for_width(width)
-    ukeys = np.unique(np.asarray(keys, dtype=np.uint64))
     size = len(ukeys)
     base = fuse_parameters(size, arity)
     params = base
@@ -374,9 +382,15 @@ def build_xor(
     empty set (:110-113), capacity 32+ceil(1.23n) floored to x3, retries on
     a deterministic reseed schedule. Returns ``(filter, iterations)``.
     """
+    return build_xor_unique(np.unique(np.asarray(keys, dtype=np.uint64)), width, workspace)
+
+
+def build_xor_unique(
+    ukeys: np.ndarray, width: int = 8, workspace: BuildWorkspace | None = None
+) -> tuple[XorFilter, int]:
+    """``build_xor`` over sorted distinct u64 keys (``np.unique`` output)."""
     ws = workspace if workspace is not None else _DEFAULT_WS
     dtype = _dtype_for_width(width, allowed=(8, 16))
-    ukeys = np.unique(np.asarray(keys, dtype=np.uint64))
     size = len(ukeys)
     if size == 0:
         raise ValueError("provide a non-empty set")

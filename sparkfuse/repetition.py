@@ -219,7 +219,7 @@ def repetition_stats(
     exact definitions). Two engines, bit-identical outputs (differential-
     and oracle-pinned):
 
-    * ``engine="arrow"`` (default): one ``mapInPandas`` pass — tokens and
+    * ``engine="arrow"`` (default): one ``mapInArrow`` pass — tokens and
       lines factorized per Arrow batch, duplicate counting by sort +
       bincount in numpy. Besides being ~3x faster clean, this path is
       IMMUNE to interpreted-eval JIT pollution: the SQL form's chained

@@ -1,9 +1,11 @@
 """SparkSession helper with scale-appropriate defaults.
 
-Designed for a multi-executor cluster (spark-submit --py-files sparkfuse.zip);
-in this sandbox it runs local[N] with the same configs. AQE is on so skewed
-shuffles re-plan at runtime; Arrow is on so every pandas UDF crosses the
-JVM/Python boundary in columnar batches.
+Designed for a multi-executor cluster; in this sandbox it runs local[N] with
+the same configs. AQE is on so skewed shuffles re-plan at runtime; Arrow is on
+so every pandas UDF crosses the JVM/Python boundary in columnar batches.
+Python workers fork from ``sparkfuse.daemon``, so a job submitted with
+``spark-submit --py-files sparkfuse.zip`` passes every ``spark_conf_pairs``
+pair as ``--conf`` and runs from the directory holding the zip.
 """
 
 from __future__ import annotations
@@ -47,7 +49,17 @@ def spark_conf_pairs(
     ArrowFieldWriter.getSizeInBytes under underBatchSizeLimit). Batch SIZE
     stays bounded by maxRecordsPerBatch x row width; operators with wide
     binary rows (multimodal) bound partition bytes explicitly, so the 64 MB
-    byte cap is redundant here and pure per-row overhead."""
+    byte cap is redundant here and pure per-row overhead.
+
+    spark.python.daemon.module forks Python workers from
+    ``sparkfuse.daemon``, which stops every task from re-reading Spark's
+    zip and jar archive indexes (~0.27 s per task on Python < 3.13). The
+    daemon starts before any task ships files, so under ``spark-submit
+    --py-files sparkfuse.zip`` (no repo on PYTHONPATH) it imports the
+    package from the relative ``sparkfuse.zip`` in the executor's working
+    directory: the submit directory in local mode, the container directory
+    the zip is shipped to on a cluster. In-process sessions import it from
+    the repo root (``export_repo_pythonpath``)."""
     b = str(shuffle_compress).lower()
     return [
         ("spark.sql.shuffle.partitions", str(shuffle_partitions)),
@@ -61,6 +73,8 @@ def spark_conf_pairs(
         ("spark.sql.execution.arrow.maxBytesPerBatch", str(2**31 - 1)),
         ("spark.driver.memory", os.environ.get("SPARKFUSE_DRIVER_MEM", "8g")),
         ("spark.sql.parquet.filterPushdown", "true"),
+        ("spark.python.daemon.module", "sparkfuse.daemon"),
+        ("spark.executorEnv.PYTHONPATH", "sparkfuse.zip"),
     ]
 
 

@@ -422,6 +422,51 @@ def test_simhash_near_dups_finds_planted_pairs(spark):
     assert (0, 1) in got and not any(2 in p for p in got)
 
 
+def test_simhash_near_dups_capped_drops_boilerplate_keeps_planted_pair(spark):
+    # the max_bucket_size exit path (dropDuplicates instead of the
+    # first-qualifying-band filter), in the exact-band regime (k=3) and the
+    # query-expansion regime (k=6): the boilerplate family floods every one
+    # of its band buckets and is dropped, while every other pair within
+    # hamming k matches brute force
+    from sparkfuse.textops import hamming64, simhash_near_dups
+
+    planted = ("sharded membership filters are rebuilt every epoch from the "
+               "transcript table and broadcast to the probe side where each "
+               "worker answers point lookups with a vectorized gather over "
+               "the fingerprint array of its shard")
+    rows = [(i, "identical boilerplate header text repeated everywhere "
+                "on every single page of the site") for i in range(60)]
+    rows += [
+        (100, planted),
+        (101, planted.replace("each", "every")),  # hamming 2
+        (102, "columnar shuffle readers decode pages of dictionary codes"),
+        (103, "an unrelated note on adaptive query execution and skew joins"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sims = simhash64(docs, "doc_id", "text").cache()
+    a = sims.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_sa"))
+    b = sims.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("_sb"))
+    for k in (3, 6):
+        brute = {
+            (r["id_a"], r["id_b"])
+            for r in a.crossJoin(b)
+            .filter(F.col("id_a") < F.col("id_b"))
+            .filter(hamming64(F.col("_sa"), F.col("_sb")) <= k)
+            .collect()
+        }
+        assert (0, 1) in brute and (100, 101) in brute, k  # fixture sanity
+        capped = {
+            (r["id_a"], r["id_b"])
+            for r in simhash_near_dups(
+                docs, "doc_id", "text", max_hamming=k, max_bucket_size=10
+            ).collect()
+        }
+        assert (100, 101) in capped, k                      # planted pair survives
+        assert not any(a < 60 and b < 60 for a, b in capped), k  # family dropped
+        assert capped == {(x, y) for x, y in brute if x >= 100}, k
+    sims.unpersist()
+
+
 def test_cosine_pairs_ignores_zero_norm_vectors(spark):
     from sparkfuse.similarity import cosine_pairs
 
