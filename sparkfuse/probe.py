@@ -38,12 +38,24 @@ Three probe modes over a built Forest:
   ≤ broadcast threshold → driver broadcast; ≤ replication budget (default
   512m, conf ``sparkfuse.probe.replicationBudget``) AND sink given →
   hybrid replication; else → routed (routed-sink when a ``sink_path`` is
-  given, shard-routed cogroup otherwise).
+  given, shard-routed cogroup otherwise). With a ``sink_path`` the driver
+  lists the sink and reads it through the same loader the workers use,
+  stopping once the payload bytes pass the broadcast threshold: a
+  broadcast-sized forest is planned AND loaded with no Spark job. Only
+  bigger forests, unlistable sinks and sink-less calls pay the Spark
+  payload-size aggregate.
+
+Every whole-sink and per-shard sink load checks each payload against its
+``content_sha256`` and fails loudly on a mismatch: a flipped fingerprint
+byte would otherwise turn into silent false negatives.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 import re
+import threading
 
 import numpy as np
 import pandas as pd
@@ -138,14 +150,17 @@ def approx_contains_arrow(
     return df.mapInArrow(probe_batches, out_schema)
 
 
-# Per-Python-worker forest cache for the worker-side sink-load probes
-# (hybrid Forest AND EpochForest variants share it). Keyed by (path, file
-# listing incl. sizes) so an appended/replaced sink is reloaded; bounded so
-# a worker holds at most a few forests. Sized for 4 live sinks x (content
-# key + per-query memo key) — a workload alternating across more sinks than
-# that will re-read from storage each query.
+# Per-process cache of whole-sink loads, as (handle, payload bytes): the
+# worker-side sink-load probes (hybrid Forest AND EpochForest variants) and
+# the planning driver share it. Keyed by (path, file listing incl. sizes) so
+# an appended/replaced sink is reloaded; bounded so a process holds at most
+# a few forests. Sized for 4 live sinks x (content key + per-query memo key)
+# — a workload alternating across more sinks than that will re-read from
+# storage each query.
 _SINK_FOREST_CACHE: dict = {}
 _SINK_CACHE_MAX = 8
+# the driver may plan from several threads: eviction + insert is one step
+_SINK_CACHE_LOCK = threading.Lock()
 
 
 def _sink_fingerprint(path: str):
@@ -182,55 +197,115 @@ def _sink_plan_token(content_key) -> str:
     ⇒ same token ⇒ workers reuse their listing/filter memos across
     queries; any append or rewrite changes the fingerprint and forces a
     fresh listing + reload."""
-    import hashlib
-
     return hashlib.sha256(repr(content_key).encode()).hexdigest()[:16]
 
 
-def _plan_token_or_fallback(sink_path: str) -> str:
-    """Content-derived plan token when the sink is listable from the
-    driver at plan time; a random per-plan token otherwise. The fallback
-    keeps lazy composition legal — building the probe DataFrame BEFORE the
-    sink is written, or on a driver without read access to an
-    executor-only URI — at the old cost (one LIST per worker per query);
-    executors still fail loudly at execution time if the sink never
-    appears."""
-    import os as _os
-
+def _sink_listing_or_none(sink_path: str):
+    """``_sink_fingerprint(sink_path)`` when the sink is listable from the
+    driver at plan time, else None. None keeps lazy composition legal —
+    building the probe DataFrame BEFORE the sink is written, or on a driver
+    without read access to an executor-only URI; executors still fail
+    loudly at execution time if the sink never appears."""
     try:
-        _, _, content_key = _sink_fingerprint(sink_path)
+        return _sink_fingerprint(sink_path)
     except Exception:
-        return _os.urandom(8).hex()
-    return _sink_plan_token(content_key)
+        return None
 
 
-def _load_cached_from_sink(path: str, plan_token: str, key_suffix: tuple, build):
-    """Shared two-layer worker cache for whole-sink loads: (path, plan_token,
-    *suffix) memoizes WITHIN one query plan so the sink listing runs once per
-    worker per query (not once per Arrow batch — at object-store latency a
-    per-batch LIST would dominate); the content-level (file listing, *suffix)
-    key persists ACROSS queries so an unchanged sink is never re-read, and a
-    changed one (append, or in-place rewrite — mtime is in the key) reloads
-    on the next query. ``build(rows)`` constructs the probe handle from the
-    sink's row dicts."""
+def _plan_token_for(listing) -> str:
+    """Content-derived plan token for a driver-side listing; a random
+    per-plan token when there is none, at the old cost (one LIST per worker
+    per query)."""
+    if listing is None:
+        return os.urandom(8).hex()
+    return _sink_plan_token(listing[2])
+
+
+def _plan_token_or_fallback(sink_path: str) -> str:
+    """Plan token for a probe planned apart from ``probe_forest``."""
+    return _plan_token_for(_sink_listing_or_none(sink_path))
+
+
+def _check_payload_sha(path: str, shard, payload: bytes, sha: str) -> None:
+    """Raise unless ``payload`` hashes to the row's recorded content_sha256.
+    A flipped fingerprint byte still deserializes and probes — as false
+    negatives — so a sink load is the place to catch it."""
+    if hashlib.sha256(payload).hexdigest() != sha:
+        raise ValueError(
+            f"corrupted forest sink {path!r}: the payload of shard {shard} "
+            "does not match its content_sha256"
+        )
+
+
+def _read_sink(path: str, filesystem, data_files, build, max_bytes: int | None):
+    """(handle, payload bytes) for a whole sink, streamed record batch by
+    record batch. Payload bytes are the sum of every row's payload length,
+    replayed rows included — byte-for-byte what ``forest_payload_bytes``
+    aggregates. Past ``max_bytes`` the read stops and returns (None, bytes
+    seen so far), so the caller never holds more than ``max_bytes`` plus
+    one batch."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
+    dataset = pads.dataset(data_files, filesystem=filesystem, format="parquet")
+    batches, nbytes = [], 0
+    for batch in dataset.to_batches():
+        nbytes += pc.sum(pc.binary_length(batch.column("payload"))).as_py() or 0
+        if max_bytes is not None and nbytes > max_bytes:
+            return None, nbytes
+        batches.append(batch)
+    rows = pa.Table.from_batches(batches, schema=dataset.schema).to_pylist()
+    for r in rows:
+        _check_payload_sha(path, r["shard"], r["payload"], r["content_sha256"])
+    return build(rows), nbytes
+
+
+def _load_cached_from_sink(
+    path: str,
+    plan_token: str,
+    key_suffix: tuple,
+    build,
+    max_bytes: int | None = None,
+    listing=None,
+):
+    """Shared two-layer cache for whole-sink loads, on workers and on the
+    planning driver: (path, plan_token, *suffix) memoizes WITHIN one query
+    plan so the sink listing runs once per worker per query (not once per
+    Arrow batch — at object-store latency a per-batch LIST would dominate);
+    the content-level (file listing, *suffix) key persists ACROSS queries so
+    an unchanged sink is never re-read, and a changed one (append, or
+    in-place rewrite — mtime is in the key) reloads on the next query.
+    ``build(rows)`` constructs the probe handle from the sink's row dicts;
+    ``listing`` is a ``_sink_fingerprint`` the caller already took.
+
+    With ``max_bytes`` the result is None when the sink's payload bytes
+    exceed it (the read stops there — see ``_read_sink``). That outcome is
+    cached too, with the bytes seen, so re-planning over an unchanged
+    too-big sink does not read it again."""
+
+    def answers(entry) -> bool:
+        # a stopped read only answers "too big" for limits below what it saw
+        return entry is not None and (
+            entry[0] is not None or (max_bytes is not None and entry[1] > max_bytes)
+        )
+
     memo_key = (path, plan_token, *key_suffix)
-    cached = _SINK_FOREST_CACHE.get(memo_key)
-    if cached is not None:
-        return cached
-    filesystem, data_files, base_key = _sink_fingerprint(path)
-    content_key = (base_key, *key_suffix)
-    handle = _SINK_FOREST_CACHE.get(content_key)
-    if handle is None:
-        tbl = pads.dataset(
-            data_files, filesystem=filesystem, format="parquet"
-        ).to_table()
-        handle = build(tbl.to_pylist())
-    while len(_SINK_FOREST_CACHE) >= _SINK_CACHE_MAX:
-        _SINK_FOREST_CACHE.pop(next(iter(_SINK_FOREST_CACHE)))
-    _SINK_FOREST_CACHE[content_key] = handle
-    _SINK_FOREST_CACHE[memo_key] = handle
+    entry = _SINK_FOREST_CACHE.get(memo_key)
+    if not answers(entry):
+        filesystem, data_files, base_key = listing or _sink_fingerprint(path)
+        content_key = (base_key, *key_suffix)
+        entry = _SINK_FOREST_CACHE.get(content_key)
+        if not answers(entry):
+            entry = _read_sink(path, filesystem, data_files, build, max_bytes)
+        with _SINK_CACHE_LOCK:
+            while len(_SINK_FOREST_CACHE) >= _SINK_CACHE_MAX:
+                _SINK_FOREST_CACHE.pop(next(iter(_SINK_FOREST_CACHE)))
+            _SINK_FOREST_CACHE[content_key] = entry
+            _SINK_FOREST_CACHE[memo_key] = entry
+    handle, nbytes = entry
+    if max_bytes is not None and nbytes > max_bytes:
+        return None
     return handle
 
 
@@ -255,12 +330,21 @@ def approx_contains_sink(
     across queries the file-listing fingerprint (names+sizes+mtimes)
     guarantees a fresh load after any append or rewrite.
     """
-    col = F.col(key) if isinstance(key, str) else key
     # content-derived plan token, fixed at plan time (ships in closure): one
     # driver-side LIST per plan, and repeat queries over an unchanged sink
     # skip the per-worker LIST + reuse the worker forest cache directly;
     # falls back to a random token when the sink is not yet listable
-    plan_token = _plan_token_or_fallback(sink_path)
+    return _approx_contains_sink(
+        df, key, sink_path, _plan_token_or_fallback(sink_path), out
+    )
+
+
+def _approx_contains_sink(
+    df: DataFrame, key: str | Column, sink_path: str, plan_token: str, out: str
+) -> DataFrame:
+    """``approx_contains_sink`` under a plan token the caller derived (the
+    planner reuses the listing it already took)."""
+    col = F.col(key) if isinstance(key, str) else key
 
     @F.pandas_udf(BooleanType())
     def probe_sink(keys: pd.Series) -> pd.Series:
@@ -518,7 +602,7 @@ _SINK_LISTING_MEMO: dict = {}
 _SINK_META_CACHE: dict = {}
 
 
-def _sink_forest_meta(sink_path: str) -> tuple[dict, str]:
+def _sink_forest_meta(sink_path: str, listing=None) -> tuple[dict, str]:
     """Driver-side (layout metadata, plan token) for a forest sink, read
     straight from the parquet files via pyarrow — NO Spark job. The previous
     shape (``_forest_meta(spark.read.parquet(sink))`` = a scan + distinct +
@@ -532,10 +616,11 @@ def _sink_forest_meta(sink_path: str) -> tuple[dict, str]:
     UNCHANGED sink now share the per-worker listing memo and shard-filter
     memo across plans (no per-query LIST on every worker), while any append
     or rewrite changes the fingerprint and therefore the token — same
-    freshness contract, strictly fewer repeated reads."""
+    freshness contract, strictly fewer repeated reads. ``listing`` is a
+    ``_sink_fingerprint`` the caller already took."""
     import pyarrow.dataset as pads
 
-    filesystem, data_files, content_key = _sink_fingerprint(sink_path)
+    filesystem, data_files, content_key = listing or _sink_fingerprint(sink_path)
     token = _sink_plan_token(content_key)
     cached = _SINK_META_CACHE.get(content_key)
     if cached is not None:
@@ -571,7 +656,8 @@ def _load_shard_filter_from_sink(path: str, plan_token: str, shard: int):
     (content key, shard) persists across queries, reloading only when the
     sink's file listing (names+sizes+mtimes) changes. Parquet predicate
     pushdown on the shard column prunes row groups (tight when the sink was
-    written clustered — ``write_forest(cluster_by_shard=True)``)."""
+    written clustered — ``write_forest(cluster_by_shard=True)``). Every row
+    read is checked against its content_sha256."""
     import pyarrow.dataset as pads
 
     memo_key = (path, plan_token, shard)
@@ -599,15 +685,18 @@ def _load_shard_filter_from_sink(path: str, plan_token: str, shard: int):
     if tbl.num_rows == 0:
         filt = None  # absent shard probes False (partial forest)
     else:
-        shas = set(tbl.column("content_sha256").to_pylist())
-        if len(shas) > 1:
+        shas = tbl.column("content_sha256").to_pylist()
+        if len(set(shas)) > 1:
             raise ValueError(
                 f"conflicting payloads for shard {shard} in {path!r} (mixed "
                 "builds, or an epoch-appended sink — read those with "
                 "EpochForest)"
             )
+        payloads = tbl.column("payload").to_pylist()
+        for payload, sha in zip(payloads, shas):
+            _check_payload_sha(path, shard, payload, sha)
         kind = tbl.column("kind")[0].as_py()
-        payload = tbl.column("payload")[0].as_py()
+        payload = payloads[0]
         if kind == "fuse":
             filt = load_fuse_bytes(
                 bytes(payload),
@@ -697,10 +786,23 @@ def approx_contains_routed_sink(
     parity claim was exactly this, because bench.py runs the cogroup row
     first. PLANS.md §17 (round-5 re-measurement) has the numbers.
     """
+    return _approx_contains_routed_sink(probe_df, key, sink_path, spark, out, None)
+
+
+def _approx_contains_routed_sink(
+    probe_df: DataFrame,
+    key: str,
+    sink_path: str,
+    spark: SparkSession,
+    out: str,
+    listing,
+) -> DataFrame:
+    """``approx_contains_routed_sink`` over a sink listing the caller may
+    already hold (None: list it here)."""
     # driver-side pyarrow meta read + content-derived plan token: no Spark
     # job at plan time, and repeat queries over an unchanged sink reuse the
     # workers' listing/filter memos (PLANS.md §17 round-5 re-measurement)
-    meta, plan_token = _sink_forest_meta(sink_path)
+    meta, plan_token = _sink_forest_meta(sink_path, listing)
     shard_bits, route = meta["shard_bits"], meta["route"]
     cols = list(probe_df.columns)
     if out in cols:
@@ -873,12 +975,20 @@ def probe_forest(
 
     Set either threshold to -1 to disable that regime.
 
-    NOTE: planning materializes the forest (one aggregate over payload
-    sizes), and the chosen path materializes it again — persist/cache a
-    lazily-built ``forest_df`` (or read it from its sink) before calling, or
-    the shard builds run twice.
+    With a ``sink_path``, ``forest_df`` must hold the sink's content: the
+    plan is made from the sink, and the hybrid and routed-sink regimes probe
+    the sink itself.
+
+    NOTE: a sink-backed plan runs no Spark job when the forest fits the
+    broadcast threshold: the driver lists the sink and reads it with
+    pyarrow, stopping once the payload bytes pass the threshold, and the
+    rows it read are the broadcast forest (cached per sink content, like
+    the workers' sink loads). Otherwise planning materializes ``forest_df``
+    (one aggregate over payload sizes) and the chosen path materializes it
+    again — persist/cache a lazily-built ``forest_df`` (or read it from its
+    sink) before calling, or the shard builds run twice.
     """
-    regime = _plan_probe_regime(
+    regime, forest, listing = _plan_probe_regime(
         forest_df, spark, broadcast_threshold, replication_budget, sink_path
     )
     if regime == "broadcast":
@@ -892,18 +1002,18 @@ def probe_forest(
             and list(probe_df.columns) == [key]
             and _batch_size_check_short_circuited(spark)
         ):
-            return approx_contains_arrow(
-                probe_df, key, Forest.from_df(forest_df), spark, out=out
-            )
-        return approx_contains(probe_df, key, Forest.from_df(forest_df), spark, out=out)
+            return approx_contains_arrow(probe_df, key, forest, spark, out=out)
+        return approx_contains(probe_df, key, forest, spark, out=out)
     if regime == "hybrid":
-        return approx_contains_sink(probe_df, key, sink_path, out=out)
+        return _approx_contains_sink(
+            probe_df, key, sink_path, _plan_token_for(listing), out
+        )
     if sink_path is not None:
         # past the replication budget but sink-readable: route probes by
         # shard and let each task read only ITS shard filters (no forest
         # shuffle, no cogroup sorts)
-        return approx_contains_routed_sink(
-            probe_df, key, sink_path, spark or probe_df.sparkSession, out=out
+        return _approx_contains_routed_sink(
+            probe_df, key, sink_path, spark or probe_df.sparkSession, out, listing
         )
     return approx_contains_routed(probe_df, key, forest_df, out=out)
 
@@ -914,8 +1024,18 @@ def _plan_probe_regime(
     broadcast_threshold: int | None,
     replication_budget: int | None,
     sink_path: str | None,
-) -> str:
-    """The probe_forest regime decision, shared with exact_member_forest."""
+) -> tuple[str, Forest | None, tuple | None]:
+    """The probe_forest regime decision, shared with exact_member_forest:
+    (regime, the Forest to broadcast — set iff the regime is "broadcast",
+    the driver's ``_sink_fingerprint`` of ``sink_path`` — None when there is
+    no sink path or the sink is not listable yet). The sink regimes reuse
+    that listing, so a plan lists its sink once.
+
+    The regime is chosen by the forest's payload bytes (sum of every row's
+    payload length). A listable sink is read on the driver through the
+    workers' loader, which stops past the broadcast threshold: when it
+    completes, its rows are the broadcast forest and no Spark job ran.
+    Otherwise the bytes come from ``forest_payload_bytes(forest_df)``."""
     if broadcast_threshold is None:
         broadcast_threshold = 10 * 1024 * 1024
         if spark is not None:
@@ -923,12 +1043,20 @@ def _plan_probe_regime(
             broadcast_threshold = _parse_byte_string(raw)
     if replication_budget is None:
         replication_budget = _replication_budget(spark)
+    listing = None if sink_path is None else _sink_listing_or_none(sink_path)
+    if listing is not None and broadcast_threshold >= 0:
+        forest = _load_cached_from_sink(
+            sink_path, _plan_token_for(listing), (), Forest,
+            max_bytes=broadcast_threshold, listing=listing,
+        )
+        if forest is not None:
+            return "broadcast", forest, listing
     nbytes = forest_payload_bytes(forest_df)
     if broadcast_threshold >= 0 and nbytes <= broadcast_threshold:
-        return "broadcast"
+        return "broadcast", Forest.from_df(forest_df), listing
     if sink_path is not None and replication_budget >= 0 and nbytes <= replication_budget:
-        return "hybrid"
-    return "routed"
+        return "hybrid", None, listing
+    return "routed", None, listing
 
 
 def exact_member_forest(
@@ -954,17 +1082,18 @@ def exact_member_forest(
     dropDuplicates shuffle); hybrid filters rows in place with the sink
     probe then semi-joins once; routed dedups keys first so only 8-byte
     keys cross the shard shuffle (``exact_member_routed``)."""
-    regime = _plan_probe_regime(
+    regime, forest, listing = _plan_probe_regime(
         forest_df, spark, broadcast_threshold, replication_budget, sink_path
     )
     if regime == "broadcast":
         return exact_member_semi_join(
-            probe_df, probe_key, build_df, build_key,
-            Forest.from_df(forest_df), spark,
+            probe_df, probe_key, build_df, build_key, forest, spark
         )
     build_keys = build_df.select(F.col(build_key).alias(probe_key)).dropDuplicates()
     if regime == "hybrid":
-        pre = approx_contains_sink(probe_df, probe_key, sink_path, out="_maybe")
+        pre = _approx_contains_sink(
+            probe_df, probe_key, sink_path, _plan_token_for(listing), "_maybe"
+        )
         pre = pre.filter(F.col("_maybe")).drop("_maybe")
         return pre.join(build_keys, on=probe_key, how="left_semi")
     if sink_path is not None:
@@ -972,9 +1101,9 @@ def exact_member_forest(
         # key-only-shuffle shape, minus the forest shuffle and sorts)
         return _exact_member_keyed(
             probe_df, probe_key, build_df, build_key,
-            lambda keys: approx_contains_routed_sink(
+            lambda keys: _approx_contains_routed_sink(
                 keys, probe_key, sink_path,
-                spark or probe_df.sparkSession, out="_maybe",
+                spark or probe_df.sparkSession, "_maybe", listing,
             ),
         )
     return exact_member_routed(probe_df, probe_key, build_df, build_key, forest_df)

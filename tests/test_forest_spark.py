@@ -599,6 +599,244 @@ def test_sink_probe_empty_sink_raises(spark, tmp_path):
         approx_contains_sink(keys, "key", str(empty), out="m").collect()
 
 
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs started while it ran): the status
+    tracker's job-id delta, with the listener bus drained on both sides so
+    an earlier job cannot land in the window late."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def test_sink_broadcast_plan_runs_no_spark_job(spark, tmp_path):
+    from sparkfuse.probe import exact_member_forest
+
+    keys = _keys_df(spark, 20_000)
+    sink = str(tmp_path / "forest")
+    write_forest(build_forest(keys, shard_bits=2), sink)
+    forest_df = spark.read.parquet(sink)
+    forest = Forest.from_df(forest_df)
+    probes = keys.unionByName(_keys_df(spark, 20_000, seed=10**6))
+
+    planned, jobs = _jobs_started(
+        spark, lambda: probe_forest(probes, "key", forest_df, spark, sink_path=sink)
+    )
+    assert jobs == 0
+    assert "MapInArrow" in _plan_of(planned)  # the broadcast regime
+    want = {
+        r["key"]: r["m"]
+        for r in approx_contains(probes, "key", forest, spark, out="m").collect()
+    }
+    got = {r["key"]: r["maybe_member"] for r in planned.collect()}
+    assert got == want
+    assert sum(want.values()) > 20_000  # false positives are compared too
+
+    confirmed, jobs = _jobs_started(
+        spark,
+        lambda: exact_member_forest(
+            probes, "key", keys, "key", forest_df, spark, sink_path=sink
+        ),
+    )
+    assert jobs == 0
+    semi = exact_member_semi_join(probes, "key", keys, "key", forest, spark)
+    assert sorted(r["key"] for r in confirmed.collect()) == sorted(
+        r["key"] for r in semi.collect()
+    )
+
+
+def test_sink_plan_bytes_match_spark_aggregate(spark, tmp_path):
+    # the driver-side sink read must pick the regime the Spark aggregate
+    # picks, to the byte — replayed rows counted as often as they appear
+    from sparkfuse.probe import _plan_probe_regime
+
+    forest_df = build_forest(_keys_df(spark, 10_000), shard_bits=1).cache()
+    sink = str(tmp_path / "forest")
+    budget = 1 << 40
+
+    def regime(threshold):
+        return _plan_probe_regime(
+            spark.read.parquet(sink), spark, threshold, budget, sink
+        )[0]
+
+    write_forest(forest_df, sink)
+    once = forest_payload_bytes(spark.read.parquet(sink))
+    assert regime(once) == "broadcast"
+    assert regime(once - 1) == "hybrid"
+    write_forest(forest_df, sink)  # byte-identical replayed rows
+    twice = forest_payload_bytes(spark.read.parquet(sink))
+    assert twice == 2 * once
+    # too-big first, so the stopped read is cached before the full one
+    assert regime(once) == "hybrid"
+    assert regime(twice - 1) == "hybrid"
+    assert regime(twice) == "broadcast"
+    forest_df.unpersist()
+
+
+def test_sink_plan_falls_back_before_sink_exists(spark, tmp_path, monkeypatch):
+    import sparkfuse.probe as probe_mod
+
+    keys = _keys_df(spark, 5_000)
+    forest_df = build_forest(keys, shard_bits=1).cache()
+    late = str(tmp_path / "late_sink")
+    # composed before the sink is written: the plan takes the aggregate
+    bc = probe_forest(keys, "key", forest_df, spark, sink_path=late)
+    hy = probe_forest(
+        keys, "key", forest_df, spark,
+        broadcast_threshold=1, replication_budget=1 << 40, sink_path=late,
+    )
+    assert "MapInArrow" in _plan_of(bc) and "probe_sink(" in _plan_of(hy)
+    write_forest(forest_df, late)
+    assert bc.filter(F.col("maybe_member")).count() == 5_000
+    assert hy.filter(F.col("maybe_member")).count() == 5_000
+
+    def driver_read(*args, **kwargs):
+        raise AssertionError("sink read on the driver")
+
+    monkeypatch.setattr(probe_mod, "_load_cached_from_sink", driver_read)
+    no_broadcast = probe_mod._plan_probe_regime(
+        spark.read.parquet(late), spark, -1, 1 << 40, late
+    )
+    assert no_broadcast[0] == "hybrid"
+    forest_df.unpersist()
+
+
+@pytest.mark.parametrize(
+    "budget,shape", [(1 << 40, "probe_sink("), (1, "probe_shards(")]
+)
+def test_sink_plan_lists_sink_once(spark, tmp_path, monkeypatch, budget, shape):
+    # hybrid and routed-sink plans reuse the planner's listing
+    import sparkfuse.probe as probe_mod
+
+    keys = _keys_df(spark, 5_000)
+    sink = str(tmp_path / "forest")
+    write_forest(build_forest(keys, shard_bits=1), sink)
+    forest_df = spark.read.parquet(sink)
+    calls = {"list": 0, "read": 0}
+    real_list, real_read = probe_mod._sink_fingerprint, probe_mod._read_sink
+
+    def counted(name, real):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+        return wrapper
+
+    monkeypatch.setattr(probe_mod, "_sink_fingerprint", counted("list", real_list))
+    monkeypatch.setattr(probe_mod, "_read_sink", counted("read", real_read))
+    for _ in range(2):
+        planned = probe_forest(
+            keys, "key", forest_df, spark,
+            broadcast_threshold=1, replication_budget=budget, sink_path=sink,
+        )
+        assert shape in _plan_of(planned)
+    # one listing per plan; the too-big read happens once per sink content
+    assert calls == {"list": 2, "read": 1}
+    monkeypatch.undo()
+    assert planned.filter(F.col("maybe_member")).count() == 5_000
+
+
+def test_sink_cache_concurrent_loads(tmp_path):
+    """More threads than cores load from more sinks than the cache holds,
+    under a short switch interval: every load returns its own sink's rows,
+    and concurrent evictions never collide."""
+    import hashlib
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkfuse.probe import _SINK_CACHE_MAX, _load_cached_from_sink
+
+    sinks = []
+    for i in range(_SINK_CACHE_MAX + 1):
+        payload = bytes([i]) * (i + 1)
+        d = tmp_path / f"sink{i}"
+        d.mkdir()
+        pq.write_table(
+            pa.table({
+                "shard": [0], "payload": [payload],
+                "content_sha256": [hashlib.sha256(payload).hexdigest()],
+            }),
+            d / "part-0.parquet",
+        )
+        sinks.append((str(d), payload))
+    errors = []
+
+    def load_many(seed):
+        rng = np.random.default_rng(seed)
+        try:
+            for _ in range(200):
+                path, payload = sinks[rng.integers(len(sinks))]
+                got = _load_cached_from_sink(
+                    path, "token", ("stress",), lambda rows: rows[0]["payload"]
+                )
+                if got != payload:
+                    errors.append((path, got))
+        except Exception as exc:  # reported through the assert below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=load_many, args=(s,)) for s in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+
+
+def _flip_payload_byte(sink: str, dst: str) -> int:
+    """Write a copy of a forest sink to ``dst`` with the last payload byte of
+    its first row flipped and content_sha256 kept; returns that row's shard."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(sink)
+    rows = table.to_pylist()
+    payload = bytearray(rows[0]["payload"])
+    payload[-1] ^= 0xFF
+    rows[0]["payload"] = bytes(payload)
+    os.makedirs(dst)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=table.schema),
+        os.path.join(dst, "part-0.parquet"),
+    )
+    return rows[0]["shard"]
+
+
+@pytest.mark.parametrize(
+    "regime,kw",
+    [
+        ("broadcast", {}),
+        ("hybrid", dict(broadcast_threshold=1, replication_budget=1 << 40)),
+        ("routed_sink", dict(broadcast_threshold=1, replication_budget=1)),
+    ],
+)
+def test_sink_load_rejects_flipped_payload_byte(spark, tmp_path, regime, kw):
+    keys = _keys_df(spark, 10_000)
+    sink = str(tmp_path / "forest")
+    write_forest(build_forest(keys, shard_bits=2), sink)
+    bad = str(tmp_path / "corrupt")
+    shard = _flip_payload_byte(sink, bad)
+    with pytest.raises(Exception) as exc_info:
+        probe_forest(
+            keys, "key", spark.read.parquet(bad), spark, sink_path=bad, **kw
+        ).collect()
+    msg = str(exc_info.value)
+    assert "content_sha256" in msg and bad in msg and f"shard {shard}" in msg
+
+
 # ---------------------------------------------------------------------------
 # determinism, mergeability, resume
 # ---------------------------------------------------------------------------
