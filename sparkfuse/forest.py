@@ -557,6 +557,46 @@ def build_forest_budgeted_resumable(
 # driver-side forest handle + probe routing
 # ---------------------------------------------------------------------------
 
+# A replayed row repeats its payload bytes, recorded sha and decode parameters.
+_REPLAY_FIELDS = ("kind", "width", "arity", "payload", "content_sha256")
+
+
+def _decode_shard_rows(rows, source: str | None = None) -> dict:
+    """shard → (row, filter) for forest rows: the one row→filter decoder,
+    shared by ``Forest``, the routed cogroup kernel and the per-shard sink
+    load.
+
+    Exact-duplicate shard rows (replayed streaming epochs under the
+    documented at-least-once append, or a doubled resumable append) are
+    byte-identical by determinism and decode once, so nkeys/size stats
+    count each shard payload once. Same shard with DIFFERENT content — the
+    payload bytes are compared, not only the recorded sha — is not a replay
+    but a corrupted/mixed sink (e.g. two different key sets appended to one
+    path, or an epoch sink read without EpochForest): silently keeping one
+    filter would produce false negatives, so fail. ``source`` (a sink path)
+    names where the rows came from in that error."""
+    decoded: dict = {}
+    for r in rows:
+        shard = int(r["shard"])
+        if shard in decoded:
+            first = decoded[shard][0]
+            if any(first[f] != r[f] for f in _REPLAY_FIELDS):
+                where = f" in {source!r}" if source else ""
+                raise ValueError(
+                    f"conflicting payloads for shard {shard}{where}: the sink "
+                    "holds multiple different filters per shard (mixed builds, "
+                    "or an epoch-appended sink — read those with EpochForest)"
+                )
+            continue
+        payload = bytes(r["payload"])
+        if r["kind"] == "fuse":
+            filt = load_fuse_bytes(payload, width=r["width"], arity=r["arity"])
+        else:
+            filt = load_xor_bytes(payload)
+        decoded[shard] = (r, filt)
+    return decoded
+
+
 class Forest:
     """Immutable collected forest: dict shard → filter, broadcast to probes.
 
@@ -571,52 +611,19 @@ class Forest:
     def __init__(self, rows):
         if not rows:
             raise ValueError("empty forest")
-        # Exact-duplicate shard rows (replayed streaming epochs under the
-        # documented at-least-once append, or a doubled resumable append) are
-        # byte-identical by determinism — drop them so nkeys/size stats count
-        # each shard payload once. Same shard with DIFFERENT content is not a
-        # replay but a corrupted/mixed sink (e.g. two different key sets
-        # appended to one path, or an epoch sink read without EpochForest):
-        # silently keeping one filter would produce false negatives, so fail.
-        seen: dict = {}
-        deduped = []
-        for r in rows:
-            shard = int(r["shard"])
-            sha = r["content_sha256"]
-            prev = seen.get(shard)
-            if prev == sha:
-                continue
-            if prev is not None:
-                raise ValueError(
-                    f"conflicting payloads for shard {shard}: the sink holds "
-                    "multiple different filters per shard (mixed builds, or "
-                    "an epoch-appended sink — read those with EpochForest)"
-                )
-            seen[shard] = sha
-            deduped.append(r)
-        rows = deduped
-        self.filters = {}
-        self.widths = {}
-        kinds = set()
-        widths = set()
-        bits = set()
-        for r in rows:
-            kinds.add((r["kind"], r["arity"], r["route"]))
-            widths.add(r["width"])
-            bits.add(r["shard_bits"])
-            if r["kind"] == "fuse":
-                filt = load_fuse_bytes(bytes(r["payload"]), width=r["width"], arity=r["arity"])
-            else:
-                filt = load_xor_bytes(bytes(r["payload"]))
-            self.filters[int(r["shard"])] = filt
-            self.widths[int(r["shard"])] = int(r["width"])
+        decoded = _decode_shard_rows(rows)
+        rows = [r for r, _ in decoded.values()]
+        self.filters = {s: filt for s, (_, filt) in decoded.items()}
+        self.widths = {s: int(r["width"]) for s, (r, _) in decoded.items()}
+        kinds = {(r["kind"], r["arity"], r["route"]) for r in rows}
+        bits = {r["shard_bits"] for r in rows}
         # widths MAY vary per shard (budgeted forests); kind/arity/route/
         # shard_bits must not — they change the routing/probe math itself
         if len(kinds) != 1 or len(bits) != 1:
             raise ValueError(f"inhomogeneous forest: kinds={kinds} shard_bits={bits}")
         (self.kind, self.arity, self.route), = kinds
         (self.shard_bits,) = bits
-        self.width = max(widths)  # widest member (informational)
+        self.width = max(self.widths.values())  # widest member (informational)
         self.nkeys = sum(r["nkeys"] for r in rows)
         self.size_in_bytes = sum(len(r["payload"]) for r in rows)
 

@@ -1,53 +1,57 @@
 """Membership queries (SURVEY.md §2.3, P1-P3 Spark surface).
 
-Three probe modes over a built Forest:
+The reference filter is immutable — build once, use many times — so a probe
+does one thing: load a filter and gather against it. This module holds the
+places that probe can run, over ONE loader, ONE decoder and ONE UDF:
 
-* ``approx_contains`` — boolean column from a broadcast filter (zero false
-  negatives, bounded false positives). The pandas UDF gathers against the
-  broadcast forest in numpy; Arrow batches in, boolean batches out.
+* **One sink loader.** ``_load_cached_from_sink`` reads a parquet forest
+  sink with pyarrow — the whole sink, or one shard by parquet pushdown on
+  ``shard`` — checks each payload against its ``content_sha256`` (a
+  flipped fingerprint byte would otherwise turn into silent false
+  negatives) and caches the result per process, keyed by the sink's file
+  listing. Workers and the planning driver share it. Every module cache is
+  written through ``_cache_put``, under one lock, since the driver may plan
+  from several threads.
+* **One row→filter decoder.** ``forest._decode_shard_rows`` turns sink rows
+  into filters for ``Forest``, the routed cogroup kernel and the per-shard
+  sink load alike: replayed rows decode once, a shard with two different
+  payloads fails loudly.
+* **One probe UDF.** ``_probe_udf`` builds every scalar probe column (the
+  broadcast ``probe``, the hybrid ``probe_sink``, the epoch ``probe_epochs``
+  and the routed-sink ``probe_shards``) and pins it where it was written.
+
+The placements:
+
+* ``approx_contains`` / ``approx_contains_arrow`` — a broadcast forest
+  (zero false negatives, bounded false positives); the ``mapInArrow`` form
+  is the keys-only fast path.
 * ``exact_member_semi_join`` — fuse-prescreen THEN exact-confirm semi-join.
   At 100 TB this is the point of the whole library: the prescreen removes
   ~all non-members *before* the shuffle, so the exact join moves only
   (true members + ~0.4% FPs) instead of the full probe table.
 * ``exact_anti_join`` — complement (definitely-absent prescreen + anti-join),
-  mirroring the reference's ground-truth validation direction (north_star:
-  "verified against exact anti-join ground truth on a sample").
-* ``approx_contains_routed`` / ``exact_member_routed`` — the big-forest path:
-  probes are routed to their shard's filter with a cogrouped shard join
-  against the forest TABLE, so no payload ever touches the driver and no
-  monolithic broadcast is built. A 10^11-key forest (~130 GB of fuse8
-  payload) is un-broadcastable; this path shuffles only 8-byte probe keys by
-  shard and ships each shard's payload once to wherever its probe partition
-  lands. The capability analog is the reference's 5×10^7-key Contains
-  benchmarks (/root/reference/binaryfusefilter_test.go:300-331) — scaled out.
-* ``approx_contains_sink`` — the HYBRID middle regime: each Python worker
-  loads the forest once from its parquet sink (process-global cache) and
-  probes locally. No driver bytes, no broadcast, and — unlike the routed
-  path — **no probe-key shuffle**. Replicating an R-byte forest to E
-  executors costs R·E bytes of storage reads ONCE; routing K probe keys
-  costs 8·K shuffle bytes EVERY query. At 10^10 probes vs a 100 MB forest on
-  1000 executors that's 100 GB of reads vs 80 GB of shuffle — and the reads
-  are cold-cache-only while the shuffle repeats per query, so the hybrid
-  wins everywhere the forest fits executor memory.
-* ``approx_contains_routed_sink`` — the routed path when the forest has a
-  readable sink: probes shuffle once to analytically chosen partitions
-  (inverse-hash routing tags — contiguous shard ranges per task, no
-  sampling pass) and each task loads only ITS shard filters from the sink
-  (no forest shuffle, no cogroup sorts).
-* ``probe_forest`` — the planner: three regimes by forest payload bytes —
-  ≤ broadcast threshold → driver broadcast; ≤ replication budget (default
-  512m, conf ``sparkfuse.probe.replicationBudget``) AND sink given →
-  hybrid replication; else → routed (routed-sink when a ``sink_path`` is
-  given, shard-routed cogroup otherwise). With a ``sink_path`` the driver
-  lists the sink and reads it through the same loader the workers use,
-  stopping once the payload bytes pass the broadcast threshold: a
-  broadcast-sized forest is planned AND loaded with no Spark job. Only
-  bigger forests, unlistable sinks and sink-less calls pay the Spark
-  payload-size aggregate.
-
-Every whole-sink and per-shard sink load checks each payload against its
-``content_sha256`` and fails loudly on a mismatch: a flipped fingerprint
-byte would otherwise turn into silent false negatives.
+  mirroring the reference's ground-truth validation direction.
+* ``approx_contains_sink`` / ``approx_contains_epoch_sink`` — HYBRID
+  replication: each Python worker loads the whole forest (or epoch set) from
+  its sink and probes locally. No driver bytes, no broadcast, no probe-key
+  shuffle. Replicating an R-byte forest to E executors costs R·E bytes of
+  storage reads ONCE; routing K probe keys costs 8·K shuffle bytes EVERY
+  query, so the hybrid wins everywhere the forest fits executor memory.
+* ``approx_contains_routed_sink`` — probes shuffle once to analytically
+  chosen partitions (inverse-hash routing tags: contiguous shard ranges per
+  task, no sampling pass) and each task loads only ITS shard filters.
+* ``approx_contains_routed`` / ``exact_member_routed`` — the sink-less big
+  forest: a cogrouped shard join against the forest TABLE, so no payload
+  touches the driver and no monolithic broadcast is built.
+* ``probe_forest`` / ``exact_member_forest`` — the planner, three regimes
+  by forest payload bytes: ≤ broadcast threshold → broadcast; ≤ replication
+  budget (conf ``sparkfuse.probe.replicationBudget``, default 512m) AND a
+  sink → hybrid; else routed (routed-sink with a ``sink_path``, the cogroup
+  without). With a listable ``sink_path`` the driver reads the sink through
+  the workers' loader, stopping once the payload bytes pass the broadcast
+  threshold, so a broadcast-sized forest is planned and loaded with no
+  Spark job. Only bigger forests, unlistable sinks and sink-less calls pay
+  the Spark payload-size aggregate.
 """
 
 from __future__ import annotations
@@ -63,10 +67,29 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
-from sparkfuse.forest import Forest, _probe_one
+from sparkfuse.forest import Forest, _decode_shard_rows, _probe_one
 from sparkfuse.hashing import to_u64
 from sparkfuse.keys import shard_column
-from sparkfuse.serialize import load_fuse_bytes, load_xor_bytes
+
+
+def _probe_udf(name: str, probe):
+    """The one probe-column construction: a scalar pandas_udf named
+    ``name`` (the name plans show) over ``probe(*numpy columns) -> bool
+    array``."""
+
+    def udf(*cols: pd.Series) -> pd.Series:
+        return pd.Series(probe(*(c.to_numpy() for c in cols)))
+
+    udf.__name__ = name
+    # The probe IS deterministic, but marking it so lets Catalyst's
+    # InferFiltersFromConstraints copy the predicate through the
+    # exact-confirm equi-join onto the BUILD side — a wasted full Arrow pass
+    # over the true key set (every member passes by the zero-FN invariant).
+    # asNondeterministic() pins the probe where it was written: on the
+    # probe side, and for the routed-sink probe above its tag-route
+    # exchange, whose per-partition shard locality is the whole point.
+    # (Verified via .explain: see PLANS.md.)
+    return F.pandas_udf(udf, BooleanType()).asNondeterministic()
 
 
 def approx_contains_udf(forest: Forest, spark=None):
@@ -75,26 +98,10 @@ def approx_contains_udf(forest: Forest, spark=None):
     Uses an explicit SparkContext broadcast so a multi-MB forest ships once
     per executor, not once per task closure.
     """
-    if spark is not None:
-        bc = spark.sparkContext.broadcast(forest)
-
-        @F.pandas_udf(BooleanType())
-        def probe(keys: pd.Series) -> pd.Series:
-            return pd.Series(bc.value.contains_np(keys.to_numpy()))
-
-    else:
-
-        @F.pandas_udf(BooleanType())
-        def probe(keys: pd.Series) -> pd.Series:
-            return pd.Series(forest.contains_np(keys.to_numpy()))
-
-    # The probe IS deterministic, but marking it so lets Catalyst's
-    # InferFiltersFromConstraints copy the predicate through the
-    # exact-confirm equi-join onto the BUILD side — a wasted full Arrow pass
-    # over the true key set (every member passes by the zero-FN invariant).
-    # asNondeterministic() pins the filter to the probe side where it was
-    # written. (Verified via .explain: see PLANS.md.)
-    return probe.asNondeterministic()
+    if spark is None:
+        return _probe_udf("probe", forest.contains_np)
+    bc = spark.sparkContext.broadcast(forest)
+    return _probe_udf("probe", lambda keys: bc.value.contains_np(keys))
 
 
 def approx_contains(
@@ -107,9 +114,13 @@ def approx_contains(
 def approx_contains_arrow(
     df: DataFrame, key: str, forest: Forest, spark, out: str = "maybe_member"
 ) -> DataFrame:
-    """Membership column via ``mapInArrow`` — the keys-only fast path
-    (+15% over the pandas_udf: 0.68 vs 0.79 s min-of-4 at the 10M-key
-    bench shape, re-measured round 5 AFTER the root-cause fix below).
+    """Membership column via ``mapInArrow`` — the keys-only fast path.
+    Measured on a 4-vCPU VM (``local[4]``, 4M keys-only probes against a
+    600k-key, 4-shard fuse8 forest, two sets of 15 alternating runs): it
+    beat the pandas_udf in 18 of 30 (medians 0.724 vs 0.790 s and 0.768 vs
+    0.810 s), and Spark 4.1's scalar ``arrow_udf`` was no better than
+    either (16 of 30 against the pandas_udf, 11 of 30 against this form).
+    So this form, and the planner's auto-pick of it, stay.
 
     Session-conf dependency (PLANS.md §17, round-5 root cause): Spark 4's
     mapInArrow input writer checks ``spark.sql.execution.arrow.
@@ -129,8 +140,7 @@ def approx_contains_arrow(
     """
     import pyarrow as pa
 
-    if out in df.columns:
-        raise ValueError(f"output column {out!r} already exists")
+    out_schema = _verdict_schema(df, out)
     bc = spark.sparkContext.broadcast(forest)
     names = list(df.columns) + [out]
     key_idx = df.columns.index(key)
@@ -144,23 +154,50 @@ def approx_contains_arrow(
                 list(batch.columns) + [pa.array(verdict)], names=names
             )
 
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField(out, BooleanType(), False)]
-    )
     return df.mapInArrow(probe_batches, out_schema)
 
 
-# Per-process cache of whole-sink loads, as (handle, payload bytes): the
-# worker-side sink-load probes (hybrid Forest AND EpochForest variants) and
-# the planning driver share it. Keyed by (path, file listing incl. sizes) so
-# an appended/replaced sink is reloaded; bounded so a process holds at most
-# a few forests. Sized for 4 live sinks x (content key + per-query memo key)
-# — a workload alternating across more sinks than that will re-read from
-# storage each query.
+def _verdict_schema(df: DataFrame, out: str, reserved: tuple = ()) -> StructType:
+    """``df``'s schema plus the boolean ``out`` column, once neither ``out``
+    nor a ``reserved`` helper column is taken."""
+    cols = df.columns
+    if out in cols:
+        raise ValueError(f"output column {out!r} already exists")
+    for name in reserved:
+        if name in cols:
+            raise ValueError(f"probe_df already has a {name!r} column (reserved)")
+    return StructType(list(df.schema.fields) + [StructField(out, BooleanType(), False)])
+
+
+# Per-process sink caches, shared by the worker-side probes and the
+# planning driver. Whole-sink loads, as (handle, payload bytes): the hybrid
+# Forest and EpochForest probes and the planner's broadcast read. Sized for
+# 4 live sinks x (content key + per-query memo key) — a workload
+# alternating across more sinks than that re-reads from storage each query.
 _SINK_FOREST_CACHE: dict = {}
 _SINK_CACHE_MAX = 8
+# Shard filters are ~2 MB each, whole forests much bigger: separate cache
+# with its own cap so routed-sink and hybrid probes never thrash each other.
+_SHARD_FILTER_CACHE: dict = {}
+_SHARD_CACHE_MAX = 128
+# Per-(path, plan_token) memo of the sink listing: one LIST per worker per
+# query, shared across every shard load of that query.
+_SINK_LISTING_MEMO: dict = {}
+# Driver-side forest-layout metadata per sink content fingerprint.
+_SINK_META_CACHE: dict = {}
 # the driver may plan from several threads: eviction + insert is one step
 _SINK_CACHE_LOCK = threading.Lock()
+# handle of a whole-sink read that stopped past its byte limit
+_STOPPED = object()
+
+
+def _cache_put(cache: dict, cap: int, entries: dict) -> None:
+    """Evict ``cache``'s oldest entries below ``cap``, then insert
+    ``entries`` — under the lock: the one writer of every sink cache."""
+    with _SINK_CACHE_LOCK:
+        while len(cache) >= cap:
+            cache.pop(next(iter(cache)))
+        cache.update(entries)
 
 
 def _sink_fingerprint(path: str):
@@ -237,23 +274,29 @@ def _check_payload_sha(path: str, shard, payload: bytes, sha: str) -> None:
         )
 
 
-def _read_sink(path: str, filesystem, data_files, build, max_bytes: int | None):
-    """(handle, payload bytes) for a whole sink, streamed record batch by
+def _read_sink(
+    path: str, filesystem, data_files, build, max_bytes: int | None, shard=None
+):
+    """(handle, payload bytes) for a whole sink — or, with ``shard``, for
+    that shard's rows only (parquet pushdown on the shard column prunes row
+    groups; tight when the sink was written clustered —
+    ``write_forest(cluster_by_shard=True)``) — streamed record batch by
     record batch. Payload bytes are the sum of every row's payload length,
     replayed rows included — byte-for-byte what ``forest_payload_bytes``
-    aggregates. Past ``max_bytes`` the read stops and returns (None, bytes
-    seen so far), so the caller never holds more than ``max_bytes`` plus
-    one batch."""
+    aggregates. Past ``max_bytes`` the read stops and returns (_STOPPED,
+    bytes seen so far), so the caller never holds more than ``max_bytes``
+    plus one batch."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
     dataset = pads.dataset(data_files, filesystem=filesystem, format="parquet")
+    pushdown = None if shard is None else pads.field("shard") == shard
     batches, nbytes = [], 0
-    for batch in dataset.to_batches():
+    for batch in dataset.to_batches(filter=pushdown):
         nbytes += pc.sum(pc.binary_length(batch.column("payload"))).as_py() or 0
         if max_bytes is not None and nbytes > max_bytes:
-            return None, nbytes
+            return _STOPPED, nbytes
         batches.append(batch)
     rows = pa.Table.from_batches(batches, schema=dataset.schema).to_pylist()
     for r in rows:
@@ -268,9 +311,10 @@ def _load_cached_from_sink(
     build,
     max_bytes: int | None = None,
     listing=None,
+    shard: int | None = None,
 ):
-    """Shared two-layer cache for whole-sink loads, on workers and on the
-    planning driver: (path, plan_token, *suffix) memoizes WITHIN one query
+    """The one sink loader, on workers and on the planning driver, with a
+    two-layer cache: (path, plan_token, *suffix) memoizes WITHIN one query
     plan so the sink listing runs once per worker per query (not once per
     Arrow batch — at object-store latency a per-batch LIST would dominate);
     the content-level (file listing, *suffix) key persists ACROSS queries so
@@ -279,30 +323,42 @@ def _load_cached_from_sink(
     ``build(rows)`` constructs the probe handle from the sink's row dicts;
     ``listing`` is a ``_sink_fingerprint`` the caller already took.
 
+    With ``shard`` only that shard's rows are read, and the result lives in
+    the shard cache — including a None from an absent shard, so a partial
+    forest costs one read, not one per batch.
+
     With ``max_bytes`` the result is None when the sink's payload bytes
     exceed it (the read stops there — see ``_read_sink``). That outcome is
     cached too, with the bytes seen, so re-planning over an unchanged
     too-big sink does not read it again."""
+    cache, cap = (
+        (_SINK_FOREST_CACHE, _SINK_CACHE_MAX) if shard is None
+        else (_SHARD_FILTER_CACHE, _SHARD_CACHE_MAX)
+    )
 
     def answers(entry) -> bool:
         # a stopped read only answers "too big" for limits below what it saw
         return entry is not None and (
-            entry[0] is not None or (max_bytes is not None and entry[1] > max_bytes)
+            entry[0] is not _STOPPED
+            or (max_bytes is not None and entry[1] > max_bytes)
         )
 
     memo_key = (path, plan_token, *key_suffix)
-    entry = _SINK_FOREST_CACHE.get(memo_key)
+    entry = cache.get(memo_key)
     if not answers(entry):
-        filesystem, data_files, base_key = listing or _sink_fingerprint(path)
+        if listing is None:
+            listing = _SINK_LISTING_MEMO.get((path, plan_token))
+            if listing is None:
+                listing = _sink_fingerprint(path)
+                _cache_put(
+                    _SINK_LISTING_MEMO, _SINK_CACHE_MAX, {(path, plan_token): listing}
+                )
+        filesystem, data_files, base_key = listing
         content_key = (base_key, *key_suffix)
-        entry = _SINK_FOREST_CACHE.get(content_key)
+        entry = cache.get(content_key)
         if not answers(entry):
-            entry = _read_sink(path, filesystem, data_files, build, max_bytes)
-        with _SINK_CACHE_LOCK:
-            while len(_SINK_FOREST_CACHE) >= _SINK_CACHE_MAX:
-                _SINK_FOREST_CACHE.pop(next(iter(_SINK_FOREST_CACHE)))
-            _SINK_FOREST_CACHE[content_key] = entry
-            _SINK_FOREST_CACHE[memo_key] = entry
+            entry = _read_sink(path, filesystem, data_files, build, max_bytes, shard)
+        _cache_put(cache, cap, {content_key: entry, memo_key: entry})
     handle, nbytes = entry
     if max_bytes is not None and nbytes > max_bytes:
         return None
@@ -345,15 +401,11 @@ def _approx_contains_sink(
     """``approx_contains_sink`` under a plan token the caller derived (the
     planner reuses the listing it already took)."""
     col = F.col(key) if isinstance(key, str) else key
-
-    @F.pandas_udf(BooleanType())
-    def probe_sink(keys: pd.Series) -> pd.Series:
-        forest = _load_forest_from_sink(sink_path, plan_token)
-        return pd.Series(forest.contains_np(keys.to_numpy()))
-
-    # asNondeterministic: same Catalyst predicate-pinning rationale as
-    # approx_contains_udf (PLANS.md §2).
-    return df.withColumn(out, probe_sink.asNondeterministic()(col))
+    probe = _probe_udf(
+        "probe_sink",
+        lambda keys: _load_forest_from_sink(sink_path, plan_token).contains_np(keys),
+    )
+    return df.withColumn(out, probe(col))
 
 
 def _load_epoch_forest_from_sink(path: str, plan_token: str, shard_bits: int):
@@ -433,15 +485,13 @@ def approx_contains_epoch_sink(
         # budget disabled: the sink may legitimately not be listable from
         # the driver yet — fall back rather than fail at plan time
         plan_token = _plan_token_or_fallback(sink_path)
-
-    @F.pandas_udf(BooleanType())
-    def probe_epochs(keys: pd.Series) -> pd.Series:
-        ef = _load_epoch_forest_from_sink(sink_path, plan_token, shard_bits)
-        return pd.Series(ef.contains_np(keys.to_numpy()))
-
-    # asNondeterministic: same Catalyst predicate-pinning rationale as
-    # approx_contains_udf (PLANS.md §2).
-    return df.withColumn(out, probe_epochs.asNondeterministic()(col))
+    probe = _probe_udf(
+        "probe_epochs",
+        lambda keys: _load_epoch_forest_from_sink(
+            sink_path, plan_token, shard_bits
+        ).contains_np(keys),
+    )
+    return df.withColumn(out, probe(col))
 
 
 def exact_member_semi_join(
@@ -540,40 +590,17 @@ def approx_contains_routed(
     import pyarrow as pa
 
     meta = _forest_meta(forest_df)
-    kind, arity = meta["kind"], meta["arity"]
     shard_bits, route = meta["shard_bits"], meta["route"]
 
+    out_schema = _verdict_schema(probe_df, out, ("_sf_shard",))
     cols = list(probe_df.columns)
-    if out in cols:
-        raise ValueError(f"output column {out!r} already exists")
-    if "_sf_shard" in cols:
-        raise ValueError("probe_df already has a '_sf_shard' column (reserved)")
-    out_schema = StructType(
-        list(probe_df.schema.fields) + [StructField(out, BooleanType(), False)]
-    )
 
     def probe_shard(probe_tbl: "pa.Table", forest_tbl: "pa.Table") -> "pa.Table":
         keys_np = probe_tbl.column(key).to_numpy(zero_copy_only=False)
-        if forest_tbl.num_rows == 0 or len(keys_np) == 0:
-            verdict = np.zeros(len(keys_np), dtype=bool)
-        else:
-            # replayed appends are byte-identical (deterministic builds);
-            # different payloads for one shard mean a mixed/corrupted sink,
-            # where picking one filter would yield false negatives — fail
-            payloads = {bytes(p.as_py()) for p in forest_tbl.column("payload")}
-            if len(payloads) > 1:
-                raise ValueError(
-                    "conflicting payloads for one shard in the forest table "
-                    "(mixed builds, or an epoch-appended sink — read those "
-                    "with EpochForest)"
-                )
-            (payload,) = payloads
-            if kind == "fuse":
-                widths = {int(w.as_py()) for w in forest_tbl.column("width")}
-                (shard_width,) = widths  # identical payloads ⇒ one width
-                filt = load_fuse_bytes(payload, width=shard_width, arity=arity)
-            else:
-                filt = load_xor_bytes(payload)
+        verdict = np.zeros(len(keys_np), dtype=bool)
+        if forest_tbl.num_rows and len(keys_np):
+            # one shard's rows: replays decode once, a conflict raises
+            ((_, filt),) = _decode_shard_rows(forest_tbl.to_pylist()).values()
             verdict = _probe_one(filt, to_u64(keys_np))
         return pa.table(
             [probe_tbl.column(c) for c in cols] + [pa.array(verdict)],
@@ -582,24 +609,14 @@ def approx_contains_routed(
 
     tagged = probe_df.withColumn("_sf_shard", shard_column(key, shard_bits, route))
     forest_keyed = forest_df.select(
-        F.col("shard").alias("_sf_shard"), "width", "payload"
+        F.col("shard").alias("_sf_shard"), "shard", "kind", "width", "arity",
+        "payload", "content_sha256",
     )
     return (
         tagged.groupBy("_sf_shard")
         .cogroup(forest_keyed.groupBy("_sf_shard"))
         .applyInArrow(probe_shard, out_schema)
     )
-
-
-# Shard filters are ~2 MB each, whole forests much bigger: separate cache
-# with its own cap so routed-sink and hybrid probes never thrash each other.
-_SHARD_FILTER_CACHE: dict = {}
-_SHARD_CACHE_MAX = 128
-# Per-(path, plan_token) memo of the sink listing: one LIST per worker per
-# query, shared across every shard load of that query.
-_SINK_LISTING_MEMO: dict = {}
-# Driver-side forest-layout metadata per sink content fingerprint.
-_SINK_META_CACHE: dict = {}
 
 
 def _sink_forest_meta(sink_path: str, listing=None) -> tuple[dict, str]:
@@ -621,95 +638,31 @@ def _sink_forest_meta(sink_path: str, listing=None) -> tuple[dict, str]:
     import pyarrow.dataset as pads
 
     filesystem, data_files, content_key = listing or _sink_fingerprint(sink_path)
-    token = _sink_plan_token(content_key)
-    cached = _SINK_META_CACHE.get(content_key)
-    if cached is not None:
-        return cached, token
-    tbl = pads.dataset(data_files, filesystem=filesystem, format="parquet").to_table(
-        columns=["kind", "arity", "shard_bits", "route"]
-    )
-    distinct = {
-        (
-            tbl.column("kind")[i].as_py(),
-            tbl.column("arity")[i].as_py(),
-            tbl.column("shard_bits")[i].as_py(),
-            tbl.column("route")[i].as_py(),
-        )
-        for i in range(tbl.num_rows)
-    }
-    if len(distinct) != 1:
-        raise ValueError(f"inhomogeneous forest: {sorted(distinct)}")
-    kind, arity, shard_bits, route = next(iter(distinct))
-    meta = {"kind": kind, "arity": arity, "shard_bits": shard_bits, "route": route}
-    while len(_SINK_META_CACHE) >= 8:
-        _SINK_META_CACHE.pop(next(iter(_SINK_META_CACHE)))
-    _SINK_META_CACHE[content_key] = meta
-    return meta, token
+    meta = _SINK_META_CACHE.get(content_key)
+    if meta is None:
+        cols = ["kind", "arity", "shard_bits", "route"]
+        tbl = pads.dataset(
+            data_files, filesystem=filesystem, format="parquet"
+        ).to_table(columns=cols)
+        distinct = set(zip(*(tbl.column(c).to_pylist() for c in cols)))
+        if len(distinct) != 1:
+            raise ValueError(f"inhomogeneous forest: {sorted(distinct)}")
+        (layout,) = distinct
+        meta = dict(zip(cols, layout))
+        _cache_put(_SINK_META_CACHE, _SINK_CACHE_MAX, {content_key: meta})
+    return meta, _sink_plan_token(content_key)
 
 
 def _load_shard_filter_from_sink(path: str, plan_token: str, shard: int):
-    """Load ONE shard's filter from the forest sink, worker-side.
-
-    Two cache layers (the _load_forest_from_sink scheme): (path, plan_token,
-    shard) memoizes within one query — including the ABSENT-shard None
-    result, so a partial forest costs one read, not one per batch — and
-    (content key, shard) persists across queries, reloading only when the
-    sink's file listing (names+sizes+mtimes) changes. Parquet predicate
-    pushdown on the shard column prunes row groups (tight when the sink was
-    written clustered — ``write_forest(cluster_by_shard=True)``). Every row
-    read is checked against its content_sha256."""
-    import pyarrow.dataset as pads
-
-    memo_key = (path, plan_token, shard)
-    if memo_key in _SHARD_FILTER_CACHE:
-        return _SHARD_FILTER_CACHE[memo_key]
-    listing = _SINK_LISTING_MEMO.get((path, plan_token))
-    if listing is None:
-        listing = _sink_fingerprint(path)
-        while len(_SINK_LISTING_MEMO) >= 8:
-            _SINK_LISTING_MEMO.pop(next(iter(_SINK_LISTING_MEMO)))
-        _SINK_LISTING_MEMO[(path, plan_token)] = listing
-    filesystem, data_files, content_key = listing
-    content_shard_key = (content_key, shard)
-    if content_shard_key in _SHARD_FILTER_CACHE:
-        filt = _SHARD_FILTER_CACHE[content_shard_key]
-        _SHARD_FILTER_CACHE[memo_key] = filt
-        return filt
-    tbl = (
-        pads.dataset(data_files, filesystem=filesystem, format="parquet")
-        .to_table(
-            filter=pads.field("shard") == shard,
-            columns=["kind", "width", "arity", "payload", "content_sha256"],
-        )
+    """ONE shard's filter from the forest sink, worker-side, or None when
+    the sink holds no row for it (an absent shard probes False — partial
+    forest): the sink loader's shard read and cache, decoded by the shared
+    row decoder."""
+    return _load_cached_from_sink(
+        path, plan_token, (shard,),
+        lambda rows: _decode_shard_rows(rows, path)[shard][1] if rows else None,
+        shard=shard,
     )
-    if tbl.num_rows == 0:
-        filt = None  # absent shard probes False (partial forest)
-    else:
-        shas = tbl.column("content_sha256").to_pylist()
-        if len(set(shas)) > 1:
-            raise ValueError(
-                f"conflicting payloads for shard {shard} in {path!r} (mixed "
-                "builds, or an epoch-appended sink — read those with "
-                "EpochForest)"
-            )
-        payloads = tbl.column("payload").to_pylist()
-        for payload, sha in zip(payloads, shas):
-            _check_payload_sha(path, shard, payload, sha)
-        kind = tbl.column("kind")[0].as_py()
-        payload = payloads[0]
-        if kind == "fuse":
-            filt = load_fuse_bytes(
-                bytes(payload),
-                width=int(tbl.column("width")[0].as_py()),
-                arity=int(tbl.column("arity")[0].as_py()),
-            )
-        else:
-            filt = load_xor_bytes(bytes(payload))
-    while len(_SHARD_FILTER_CACHE) >= _SHARD_CACHE_MAX:
-        _SHARD_FILTER_CACHE.pop(next(iter(_SHARD_FILTER_CACHE)))
-    _SHARD_FILTER_CACHE[content_shard_key] = filt
-    _SHARD_FILTER_CACHE[memo_key] = filt
-    return filt
 
 
 def _shuffle_partition_count(spark) -> int:
@@ -781,7 +734,7 @@ def approx_contains_routed_sink(
     a measured local-mode pathology: after any cogroup/applyInArrow query
     runs in the session, reused Python workers execute ``mapInArrow``
     plans ~2x slower (flat, not cache warm-up; pandas_udf plans are
-    unaffected; reproduced in tools/profile_routedsink_poison.py) — the
+    unaffected; PLANS.md §17 has the reproduction) — the
     round-4 bench record's routed-sink deficit vs PLANS.md §17's ad-hoc
     parity claim was exactly this, because bench.py runs the cogroup row
     first. PLANS.md §17 (round-5 re-measurement) has the numbers.
@@ -804,37 +757,23 @@ def _approx_contains_routed_sink(
     # workers' listing/filter memos (PLANS.md §17 round-5 re-measurement)
     meta, plan_token = _sink_forest_meta(sink_path, listing)
     shard_bits, route = meta["shard_bits"], meta["route"]
-    cols = list(probe_df.columns)
-    if out in cols:
-        raise ValueError(f"output column {out!r} already exists")
-    for reserved in ("_sf_shard", "_sf_tag"):
-        if reserved in cols:
-            raise ValueError(
-                f"probe_df already has a {reserved!r} column (reserved)"
-            )
+    _verdict_schema(probe_df, out, ("_sf_shard", "_sf_tag"))
 
-    @F.pandas_udf(BooleanType())
-    def probe_shards(keys: pd.Series, shards: pd.Series) -> pd.Series:
-        keys_np = keys.to_numpy()
-        shards_np = shards.to_numpy()
-        verdict = np.zeros(len(keys_np), dtype=bool)
-        for s in np.unique(shards_np):
+    def probe_shards(keys, shards):
+        verdict = np.zeros(len(keys), dtype=bool)
+        for s in np.unique(shards):
             filt = _load_shard_filter_from_sink(sink_path, plan_token, int(s))
-            if filt is None:
-                continue
-            mask = shards_np == s
-            verdict[mask] = _probe_one(filt, to_u64(keys_np[mask]))
-        return pd.Series(verdict)
+            if filt is not None:
+                mask = shards == s
+                verdict[mask] = _probe_one(filt, to_u64(keys[mask]))
+        return verdict
 
     tagged = probe_df.withColumn("_sf_shard", shard_column(key, shard_bits, route))
     rep = _tag_route(tagged, spark, shard_bits)
-    # asNondeterministic pins the probe column above the exchange (the same
-    # Catalyst predicate-pinning rationale as approx_contains_udf) — the
-    # per-partition shard locality is the whole point of the tag route
-    return rep.withColumn(
-        out,
-        probe_shards.asNondeterministic()(F.col(key), F.col("_sf_shard")),
-    ).drop("_sf_shard", "_sf_tag")
+    probe = _probe_udf("probe_shards", probe_shards)
+    return rep.withColumn(out, probe(F.col(key), F.col("_sf_shard"))).drop(
+        "_sf_shard", "_sf_tag"
+    )
 
 
 def _tag_route(tagged: DataFrame, spark: SparkSession, shard_bits: int) -> DataFrame:
@@ -988,34 +927,10 @@ def probe_forest(
     again — persist/cache a lazily-built ``forest_df`` (or read it from its
     sink) before calling, or the shard builds run twice.
     """
-    regime, forest, listing = _plan_probe_regime(
+    _, _, prescreen = _plan_probe_regime(
         forest_df, spark, broadcast_threshold, replication_budget, sink_path
     )
-    if regime == "broadcast":
-        # keys-only probe frames take the mapInArrow form (+15% — no pandas
-        # Series wrap) when it is SAFE: the session must have the per-row
-        # batch-size check short-circuited (get_spark does; PLANS.md §17 —
-        # without it, mapInArrow degrades ~2-3x in JIT-polluted sessions),
-        # and the frame must be narrow (mapInArrow round-trips every column)
-        if (
-            spark is not None
-            and list(probe_df.columns) == [key]
-            and _batch_size_check_short_circuited(spark)
-        ):
-            return approx_contains_arrow(probe_df, key, forest, spark, out=out)
-        return approx_contains(probe_df, key, forest, spark, out=out)
-    if regime == "hybrid":
-        return _approx_contains_sink(
-            probe_df, key, sink_path, _plan_token_for(listing), out
-        )
-    if sink_path is not None:
-        # past the replication budget but sink-readable: route probes by
-        # shard and let each task read only ITS shard filters (no forest
-        # shuffle, no cogroup sorts)
-        return _approx_contains_routed_sink(
-            probe_df, key, sink_path, spark or probe_df.sparkSession, out, listing
-        )
-    return approx_contains_routed(probe_df, key, forest_df, out=out)
+    return prescreen(probe_df, key, out)
 
 
 def _plan_probe_regime(
@@ -1024,12 +939,12 @@ def _plan_probe_regime(
     broadcast_threshold: int | None,
     replication_budget: int | None,
     sink_path: str | None,
-) -> tuple[str, Forest | None, tuple | None]:
-    """The probe_forest regime decision, shared with exact_member_forest:
-    (regime, the Forest to broadcast — set iff the regime is "broadcast",
-    the driver's ``_sink_fingerprint`` of ``sink_path`` — None when there is
-    no sink path or the sink is not listable yet). The sink regimes reuse
-    that listing, so a plan lists its sink once.
+):
+    """The one regime dispatch, shared by probe_forest and
+    exact_member_forest: (regime, the Forest to broadcast — set iff the
+    regime is "broadcast", ``prescreen(df, key, out)`` — the regime's probe
+    column). The sink regimes reuse the driver's ``_sink_fingerprint`` of
+    ``sink_path``, so a plan lists its sink once.
 
     The regime is chosen by the forest's payload bytes (sum of every row's
     payload length). A listable sink is read on the driver through the
@@ -1044,19 +959,49 @@ def _plan_probe_regime(
     if replication_budget is None:
         replication_budget = _replication_budget(spark)
     listing = None if sink_path is None else _sink_listing_or_none(sink_path)
+    forest = None
     if listing is not None and broadcast_threshold >= 0:
         forest = _load_cached_from_sink(
             sink_path, _plan_token_for(listing), (), Forest,
             max_bytes=broadcast_threshold, listing=listing,
         )
-        if forest is not None:
-            return "broadcast", forest, listing
-    nbytes = forest_payload_bytes(forest_df)
-    if broadcast_threshold >= 0 and nbytes <= broadcast_threshold:
-        return "broadcast", Forest.from_df(forest_df), listing
+    if forest is None:
+        nbytes = forest_payload_bytes(forest_df)
+        if broadcast_threshold >= 0 and nbytes <= broadcast_threshold:
+            forest = Forest.from_df(forest_df)
+    if forest is not None:
+
+        def broadcast(df, key, out):
+            # keys-only probe frames take the mapInArrow form (faster — see
+            # approx_contains_arrow) when it is SAFE: the session must have
+            # the per-row batch-size check short-circuited (get_spark does;
+            # PLANS.md §17 — without it, mapInArrow degrades ~2-3x in
+            # JIT-polluted sessions), and the frame must be narrow
+            # (mapInArrow round-trips every column)
+            if (
+                spark is not None
+                and list(df.columns) == [key]
+                and _batch_size_check_short_circuited(spark)
+            ):
+                return approx_contains_arrow(df, key, forest, spark, out=out)
+            return approx_contains(df, key, forest, spark, out=out)
+
+        return "broadcast", forest, broadcast
     if sink_path is not None and replication_budget >= 0 and nbytes <= replication_budget:
-        return "hybrid", None, listing
-    return "routed", None, listing
+        token = _plan_token_for(listing)
+        return "hybrid", None, lambda df, key, out: _approx_contains_sink(
+            df, key, sink_path, token, out
+        )
+    if sink_path is not None:
+        # past the replication budget but sink-readable: route probes by
+        # shard and let each task read only ITS shard filters (no forest
+        # shuffle, no cogroup sorts)
+        return "routed", None, lambda df, key, out: _approx_contains_routed_sink(
+            df, key, sink_path, spark or df.sparkSession, out, listing
+        )
+    return "routed", None, lambda df, key, out: approx_contains_routed(
+        df, key, forest_df, out=out
+    )
 
 
 def exact_member_forest(
@@ -1082,31 +1027,22 @@ def exact_member_forest(
     dropDuplicates shuffle); hybrid filters rows in place with the sink
     probe then semi-joins once; routed dedups keys first so only 8-byte
     keys cross the shard shuffle (``exact_member_routed``)."""
-    regime, forest, listing = _plan_probe_regime(
+    regime, forest, prescreen = _plan_probe_regime(
         forest_df, spark, broadcast_threshold, replication_budget, sink_path
     )
     if regime == "broadcast":
         return exact_member_semi_join(
             probe_df, probe_key, build_df, build_key, forest, spark
         )
-    build_keys = build_df.select(F.col(build_key).alias(probe_key)).dropDuplicates()
     if regime == "hybrid":
-        pre = _approx_contains_sink(
-            probe_df, probe_key, sink_path, _plan_token_for(listing), "_maybe"
-        )
+        pre = prescreen(probe_df, probe_key, "_maybe")
         pre = pre.filter(F.col("_maybe")).drop("_maybe")
+        build_keys = build_df.select(F.col(build_key).alias(probe_key)).dropDuplicates()
         return pre.join(build_keys, on=probe_key, how="left_semi")
-    if sink_path is not None:
-        # routed regime with a readable sink: routed-sink prescreen (same
-        # key-only-shuffle shape, minus the forest shuffle and sorts)
-        return _exact_member_keyed(
-            probe_df, probe_key, build_df, build_key,
-            lambda keys: _approx_contains_routed_sink(
-                keys, probe_key, sink_path,
-                spark or probe_df.sparkSession, "_maybe", listing,
-            ),
-        )
-    return exact_member_routed(probe_df, probe_key, build_df, build_key, forest_df)
+    return _exact_member_keyed(
+        probe_df, probe_key, build_df, build_key,
+        lambda keys: prescreen(keys, probe_key, "_maybe"),
+    )
 
 
 _BYTE_SUFFIXES = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3,

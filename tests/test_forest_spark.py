@@ -162,25 +162,37 @@ def test_routed_probe_partial_forest_missing_shards(spark):
     partial_df.unpersist()
 
 
-def test_routed_probe_non_fuse8_kinds(spark):
-    # the routed kernel loads (kind, width, arity) from forest metadata;
-    # prove the non-default branches (xor, wide fuse) route correctly
+def test_routed_probe_non_fuse8_kinds(spark, tmp_path):
+    # the routed kernels load (kind, width, arity) from forest metadata;
+    # prove the non-default branches (xor, wide fuse) route correctly, for
+    # the cogroup and the routed-sink probe, false positives included
+    from sparkfuse.probe import approx_contains_routed_sink
+
     for kind, width, arity in [("xor", 16, 3), ("fuse", 16, 3), ("fuse", 8, 4)]:
         keys = _keys_df(spark, 15_000, seed=width)
         forest_df = build_forest(
             keys, kind=kind, width=width, arity=arity, shard_bits=2
         ).cache()
         forest = Forest.from_df(forest_df)
+        sink = str(tmp_path / f"{kind}{width}_{arity}")
+        write_forest(forest_df, sink)
         probes = keys.unionByName(_keys_df(spark, 5_000, seed=4321))
         routed = {
             r["key"]: r["m"]
             for r in approx_contains_routed(probes, "key", forest_df, out="m").collect()
+        }
+        routed_sink = {
+            r["key"]: r["m"]
+            for r in approx_contains_routed_sink(
+                probes, "key", sink, spark, out="m"
+            ).collect()
         }
         bc = {
             r["key"]: r["m"]
             for r in approx_contains(probes, "key", forest, spark, out="m").collect()
         }
         assert routed == bc, (kind, width, arity)
+        assert routed_sink == bc, (kind, width, arity)
         forest_df.unpersist()
 
 
@@ -739,44 +751,96 @@ def test_sink_plan_lists_sink_once(spark, tmp_path, monkeypatch, budget, shape):
     assert planned.filter(F.col("maybe_member")).count() == 5_000
 
 
-def test_sink_cache_concurrent_loads(tmp_path):
-    """More threads than cores load from more sinks than the cache holds,
-    under a short switch interval: every load returns its own sink's rows,
-    and concurrent evictions never collide."""
+def _stress_sinks(tmp_path, n_sinks, n_shards):
+    """``n_sinks`` one-file forest sinks of ``n_shards`` tiny fuse8 filters
+    each; sink i records shard_bits=i, so every sink has its own layout.
+    Returns [(path, {shard: payload}, layout)]."""
     import hashlib
-    import sys
-    import threading
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sparkfuse.probe import _SINK_CACHE_MAX, _load_cached_from_sink
+    from sparkfuse.kernels import build_fuse
+    from sparkfuse.serialize import save_fuse_bytes
 
     sinks = []
-    for i in range(_SINK_CACHE_MAX + 1):
-        payload = bytes([i]) * (i + 1)
+    for i in range(n_sinks):
+        payloads = {
+            s: save_fuse_bytes(
+                build_fuse(np.arange(20, dtype=np.uint64) + 1000 * (i * n_shards + s))[0]
+            )
+            for s in range(n_shards)
+        }
+        layout = {"kind": "fuse", "arity": 3, "shard_bits": i, "route": "xxh64"}
         d = tmp_path / f"sink{i}"
         d.mkdir()
         pq.write_table(
             pa.table({
-                "shard": [0], "payload": [payload],
-                "content_sha256": [hashlib.sha256(payload).hexdigest()],
+                "shard": list(payloads),
+                **{c: [v] * n_shards for c, v in layout.items()},
+                "width": [8] * n_shards,
+                "payload": list(payloads.values()),
+                "content_sha256": [
+                    hashlib.sha256(p).hexdigest() for p in payloads.values()
+                ],
             }),
             d / "part-0.parquet",
         )
-        sinks.append((str(d), payload))
+        sinks.append((str(d), payloads, layout))
+    return sinks
+
+
+def _load_whole(path, shard):
+    from sparkfuse.probe import _load_cached_from_sink
+
+    return _load_cached_from_sink(
+        path, "token", ("stress",), lambda rows: {r["shard"]: r["payload"] for r in rows}
+    )
+
+
+def _load_shard(path, shard):
+    from sparkfuse.probe import _load_shard_filter_from_sink
+    from sparkfuse.serialize import save_fuse_bytes
+
+    return save_fuse_bytes(_load_shard_filter_from_sink(path, "token", shard))
+
+
+def _load_meta(path, shard):
+    from sparkfuse.probe import _sink_forest_meta
+
+    return _sink_forest_meta(path)[0]
+
+
+@pytest.mark.parametrize(
+    "loader,want",
+    [
+        (_load_whole, lambda payloads, layout, shard: payloads),
+        (_load_shard, lambda payloads, layout, shard: payloads[shard]),
+        (_load_meta, lambda payloads, layout, shard: layout),
+    ],
+    ids=["whole_sink", "shard", "meta"],
+)
+def test_sink_cache_concurrent_loads(tmp_path, loader, want):
+    """More threads than cores load from more sinks than the cache holds
+    (9 sinks x 8 shards: past the whole-sink and meta caps of 8 entries and
+    the shard cap of 128), under a short switch interval: every load
+    returns its own sink's content, and concurrent evictions never
+    collide."""
+    import sys
+    import threading
+
+    sinks = _stress_sinks(tmp_path, n_sinks=9, n_shards=8)
     errors = []
 
     def load_many(seed):
         rng = np.random.default_rng(seed)
         try:
             for _ in range(200):
-                path, payload = sinks[rng.integers(len(sinks))]
-                got = _load_cached_from_sink(
-                    path, "token", ("stress",), lambda rows: rows[0]["payload"]
-                )
-                if got != payload:
-                    errors.append((path, got))
+                path, payloads, layout = sinks[rng.integers(len(sinks))]
+                shard = int(rng.integers(len(payloads)))
+                got = loader(path, shard)
+                if got != want(payloads, layout, shard):
+                    errors.append((path, shard, got))
         except Exception as exc:  # reported through the assert below
             errors.append(exc)
 
@@ -889,18 +953,25 @@ def test_forest_stats_dedup_replayed_rows(spark):
 def test_forest_rejects_conflicting_shard_payloads(spark):
     # two DIFFERENT builds appended to one sink is a mixed sink, not a
     # replay: picking either filter silently false-negatives the other's
-    # keys, so both probe paths must fail loudly
+    # keys, so both probe paths must fail loudly. So is a "replayed" row
+    # whose payload differs by one byte while its recorded sha is the
+    # original's: the payload bytes are compared, not just the sha.
     a = build_forest(_keys_df(spark, 5_000, seed=1), shard_bits=1)
     b = build_forest(_keys_df(spark, 5_000, seed=2), shard_bits=1)
-    mixed = a.unionByName(b).cache()
-    with pytest.raises(ValueError, match="conflicting|Epoch"):
-        Forest.from_df(mixed)
-    with pytest.raises(Exception) as exc_info:
-        approx_contains_routed(
-            _keys_df(spark, 1_000, seed=1), "key", mixed, out="m"
-        ).collect()
-    assert "conflicting" in str(exc_info.value)
-    mixed.unpersist()
+    rows = [r.asDict() for r in a.collect()]
+    flipped = dict(rows[0], payload=bytearray(rows[0]["payload"]))
+    flipped["payload"][-1] ^= 0xFF
+    replayed = spark.createDataFrame(rows + [flipped], a.schema)
+    for table in (a.unionByName(b), replayed):
+        table = table.cache()
+        with pytest.raises(ValueError, match="conflicting|Epoch"):
+            Forest.from_df(table)
+        with pytest.raises(Exception) as exc_info:
+            approx_contains_routed(
+                _keys_df(spark, 1_000, seed=1), "key", table, out="m"
+            ).collect()
+        assert "conflicting" in str(exc_info.value)
+        table.unpersist()
 
 
 def test_parse_byte_string_grammar():
