@@ -27,10 +27,10 @@ shards only, discovered by anti-joining the sink.
 from __future__ import annotations
 
 import hashlib
+import inspect
 import math
 import time
-from dataclasses import dataclass
-from typing import Iterator
+from dataclasses import dataclass, fields, replace
 
 import numpy as np
 import pandas as pd
@@ -47,16 +47,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from sparkfuse.hashing import murmur64, rotl64, to_u64, xxh64_u64
+from sparkfuse.hashing import murmur64, to_u64, xxh64_u64
 from sparkfuse.keys import dedup_keys, shard_column
-from sparkfuse.kernels import (
-    FuseFilter,
-    XorFilter,
-    build_fuse_unique,
-    build_xor_unique,
-    fuse_contains,
-    xor_contains,
-)
+from sparkfuse.kernels import _verdict, build_fuse_unique, build_xor_unique
 from sparkfuse.serialize import (
     load_fuse_bytes,
     load_xor_bytes,
@@ -96,6 +89,30 @@ class ForestSpec:
     route: str = "xxh64"
 
 
+# kind → (build(sorted distinct keys, spec) → (filter, iterations),
+#         save(filter) → payload, load(payload, row) → filter):
+# the one place a filter kind is dispatched
+_KINDS = {
+    "fuse": (
+        lambda ukeys, spec: build_fuse_unique(ukeys, width=spec.width, arity=spec.arity),
+        save_fuse_bytes,
+        lambda payload, row: load_fuse_bytes(payload, width=row["width"], arity=row["arity"]),
+    ),
+    "xor": (
+        lambda ukeys, spec: build_xor_unique(ukeys, width=spec.width),
+        save_xor_bytes,
+        lambda payload, row: load_xor_bytes(payload),
+    ),
+}
+
+
+def _kind(kind: str):
+    """The kind table's (build, save, load) for ``kind``."""
+    if kind not in _KINDS:
+        raise ValueError(f"unknown filter kind {kind!r}")
+    return _KINDS[kind]
+
+
 def plan_shard_bits(
     n_keys: int,
     target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD,
@@ -118,54 +135,116 @@ def plan_shard_bits(
     return bits
 
 
-def _build_one(keys_u64: np.ndarray, spec: ForestSpec):
-    """One shard's filter, payload, iterations, build seconds and distinct
-    key count (taken from the build's own dedup)."""
+def _forest_row(shard: int, keys_u64: np.ndarray, spec: ForestSpec) -> dict:
+    """One shard's FOREST_SCHEMA row: the filter over the distinct keys, its
+    payload and lineage (seed, iterations, build seconds, the distinct key
+    count taken from the build's own dedup, bits/entry, sha256). Serves the
+    applyInPandas kernel and ``build_forest_driver`` alike."""
     t0 = time.perf_counter()
     ukeys = np.unique(keys_u64)
-    if spec.kind == "fuse":
-        filt, iterations = build_fuse_unique(ukeys, width=spec.width, arity=spec.arity)
-        payload = save_fuse_bytes(filt)
-    elif spec.kind == "xor":
-        filt, iterations = build_xor_unique(ukeys, width=spec.width)
-        payload = save_xor_bytes(filt)
-    else:
-        raise ValueError(f"unknown filter kind {spec.kind!r}")
-    dt = time.perf_counter() - t0
-    return filt, payload, iterations, dt, len(ukeys)
+    build, save, _ = _kind(spec.kind)
+    filt, iterations = build(ukeys, spec)
+    payload = save(filt)
+    return {
+        "shard": shard,
+        "kind": spec.kind,
+        "width": spec.width,
+        "arity": spec.arity,
+        "shard_bits": spec.shard_bits,
+        "route": spec.route,
+        "seed": int(np.uint64(filt.seed).astype(np.int64)),
+        "nkeys": len(ukeys),
+        "iterations": iterations,
+        "build_seconds": time.perf_counter() - t0,
+        "bits_per_entry": filt.bits_per_entry(len(ukeys)),
+        "payload": payload,
+        "content_sha256": hashlib.sha256(payload).hexdigest(),
+    }
 
 
 def _kernel_factory(spec: ForestSpec):
-    """Per-shard applyInPandas kernel: pdf(key[, shard]) → one forest row."""
+    """Per-shard applyInPandas kernel: pdf(key, shard[, width]) → one forest
+    row. A ``width`` column overrides the spec's width per shard (budgeted
+    forests)."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = to_u64(pdf["key"].to_numpy())
-        shard = int(pdf["shard"].iloc[0]) if "shard" in pdf else 0
         kspec = spec
-        if "width" in pdf:  # per-shard width override (budgeted forests)
-            from dataclasses import replace
-
+        if "width" in pdf:
             kspec = replace(spec, width=int(pdf["width"].iloc[0]))
-        filt, payload, iterations, dt, nkeys = _build_one(keys, kspec)
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "kind": [kspec.kind],
-                "width": [kspec.width],
-                "arity": [kspec.arity],
-                "shard_bits": [kspec.shard_bits],
-                "route": [kspec.route],
-                "seed": [np.uint64(filt.seed).astype(np.int64)],
-                "nkeys": [nkeys],
-                "iterations": [iterations],
-                "build_seconds": [dt],
-                "bits_per_entry": [filt.fingerprints.nbytes * 8 / max(nkeys, 1)],
-                "payload": [payload],
-                "content_sha256": [hashlib.sha256(payload).hexdigest()],
-            }
-        )
+        row = _forest_row(int(pdf["shard"].iloc[0]), to_u64(pdf["key"].to_numpy()), kspec)
+        return pd.DataFrame({name: [value] for name, value in row.items()})
 
     return kernel
+
+
+def _sharded_keys(
+    keys_df: DataFrame, key_name: str, shard_bits: int, route: str,
+    pre_dedup: bool = False,
+) -> DataFrame:
+    """(key, shard) rows: ``keys_df[key_name]`` as ``key`` (deduplicated
+    first with ``pre_dedup``) and its shard id by the routing rule probes
+    mirror."""
+    keys = keys_df.select(F.col(key_name).alias("key"))
+    if pre_dedup:
+        keys = dedup_keys(keys)
+    return keys.withColumn("shard", shard_column("key", shard_bits, route))
+
+
+def _unbuilt(sharded: DataFrame, done: DataFrame) -> DataFrame:
+    """``sharded``'s rows of the shards ``done`` (shard ids) does not hold."""
+    return sharded.join(F.broadcast(done), "shard", "left_anti")
+
+
+def _build_shards(
+    sharded: DataFrame,
+    spec: ForestSpec,
+    widths: dict[int, int] | None = None,
+    done: DataFrame | None = None,
+) -> DataFrame:
+    """The one shard build: ``_sharded_keys`` rows → one FOREST_SCHEMA row per
+    shard, through a single ``groupBy("shard").applyInPandas``.
+
+    ``done`` (built shard ids) drops those shards' KEYS below the kernel:
+    filtering the kernel's output instead would re-run every shard's
+    construction and discard it (Catalyst cannot push an anti-join under a
+    Python UDF).
+
+    ``widths`` (shard → 8/16/32) sets each shard's width through a LEFT
+    join: an inner join would silently DROP every key of a shard the plan
+    did not see (possible when keys_df has nondeterministic lineage or the
+    source grew between the counts action and the build) — a zero-FN
+    violation. Unplanned shards build at the floor width 8 instead."""
+    if done is not None:
+        sharded = _unbuilt(sharded, done)
+    if widths is not None:
+        bad = {w for w in widths.values() if w not in (8, 16, 32)}
+        if bad:
+            raise ValueError(
+                f"explicit width plan contains invalid widths {sorted(bad)} "
+                "(must be 8, 16 or 32) — failing at the driver instead of "
+                "deep inside the build kernel"
+            )
+        widths_df = sharded.sparkSession.createDataFrame(
+            sorted(widths.items()), "shard long, width int"
+        )
+        sharded = sharded.join(F.broadcast(widths_df), "shard", "left").withColumn(
+            "width", F.coalesce(F.col("width"), F.lit(8))
+        )
+    return sharded.groupBy("shard").applyInPandas(_kernel_factory(spec), FOREST_SCHEMA)
+
+
+def _call_args(fn, *args, **kwargs) -> dict:
+    """``fn``'s arguments, defaults filled in, for a call with ``args`` and
+    ``kwargs`` — raising the TypeError the call itself would."""
+    bound = inspect.signature(fn).bind(*args, **kwargs)
+    bound.apply_defaults()
+    return bound.arguments
+
+
+def _spec_from(args: dict) -> ForestSpec:
+    """The ForestSpec of a build call's arguments (``_call_args``); a field
+    the call does not take keeps its default."""
+    return ForestSpec(**{f.name: args[f.name] for f in fields(ForestSpec) if f.name in args})
 
 
 def build_forest(
@@ -190,16 +269,12 @@ def build_forest(
     worth it when the duplicate ratio is high (shrinks shuffle bytes), skipped
     by default because the kernel dedups anyway and one shuffle beats two.
     """
-    keys_df = keys_df.select(F.col(key_name).alias("key"))
     if shard_bits is None:
-        n_est = keys_df.agg(F.approx_count_distinct("key").alias("n")).first()["n"]
+        n_est = keys_df.agg(F.approx_count_distinct(key_name).alias("n")).first()["n"]
         shard_bits = plan_shard_bits(n_est, target_keys_per_shard, min_shards)
-    if pre_dedup:
-        keys_df = dedup_keys(keys_df)
     spec = ForestSpec(kind=kind, width=width, arity=arity, shard_bits=shard_bits,
                       route=route)
-    sharded = keys_df.withColumn("shard", shard_column("key", shard_bits, route))
-    return sharded.groupBy("shard").applyInPandas(_kernel_factory(spec), FOREST_SCHEMA)
+    return _build_shards(_sharded_keys(keys_df, key_name, shard_bits, route, pre_dedup), spec)
 
 
 def build_forest_driver(
@@ -219,28 +294,8 @@ def build_forest_driver(
     of pure scheduling per call. This builds the identical single-shard
     filter (same deterministic kernel and seed schedule) in-process.
     """
-    spec = ForestSpec(kind=kind, width=width, arity=arity, shard_bits=0)
     keys_u64 = to_u64(np.asarray(keys_i64, dtype=np.int64))
-    filt, payload, iterations, dt, nkeys = _build_one(keys_u64, spec)
-    return Forest(
-        [
-            {
-                "shard": 0,
-                "kind": kind,
-                "width": width,
-                "arity": arity,
-                "shard_bits": 0,
-                "route": spec.route,
-                "seed": int(np.uint64(filt.seed).astype(np.int64)),
-                "nkeys": nkeys,
-                "iterations": iterations,
-                "build_seconds": dt,
-                "bits_per_entry": filt.fingerprints.nbytes * 8 / max(nkeys, 1),
-                "payload": payload,
-                "content_sha256": hashlib.sha256(payload).hexdigest(),
-            }
-        ]
-    )
+    return Forest([_forest_row(0, keys_u64, ForestSpec(kind=kind, width=width, arity=arity))])
 
 
 def plan_budgeted_widths(
@@ -345,37 +400,12 @@ def build_forest_budgeted(
     could pick different widths for the missing shards —
     ``build_forest_budgeted_resumable`` persists the plan next to the sink
     and reuses it."""
-    keys_df = keys_df.select(F.col(key_name).alias("key"))
-    if pre_dedup:
-        keys_df = dedup_keys(keys_df)
-    sharded = keys_df.withColumn("shard", shard_column("key", shard_bits, route))
+    sharded = _sharded_keys(keys_df, key_name, shard_bits, route, pre_dedup)
     if widths is None:
         widths = _plan_widths(sharded, budget_bytes, arity)
-    else:
-        bad = {w for w in widths.values() if w not in (8, 16, 32)}
-        if bad:
-            raise ValueError(
-                f"explicit width plan contains invalid widths {sorted(bad)} "
-                "(must be 8, 16 or 32) — failing at the driver instead of "
-                "deep inside the build kernel"
-            )
-    spark = keys_df.sparkSession
-    widths_df = spark.createDataFrame(
-        [(s, w) for s, w in sorted(widths.items())], "shard long, width int"
-    )
     spec = ForestSpec(kind="fuse", width=8, arity=arity, shard_bits=shard_bits,
                       route=route)
-    # LEFT join + width default: an inner join would silently DROP every key
-    # of a shard the planning pass didn't see (possible when keys_df has
-    # nondeterministic lineage or the source grew between the counts action
-    # and the build) — a zero-FN violation. Unplanned shards build at the
-    # floor width instead.
-    return (
-        sharded.join(F.broadcast(widths_df), "shard", "left")
-        .withColumn("width", F.coalesce(F.col("width"), F.lit(8)))
-        .groupBy("shard")
-        .applyInPandas(_kernel_factory(spec), FOREST_SCHEMA)
-    )
+    return _build_shards(sharded, spec, widths)
 
 
 def write_forest(
@@ -410,13 +440,12 @@ def build_forest_resumable(
     Requires explicit ``shard_bits`` in build_kwargs so the shard layout is
     stable across runs.
 
-    The done-shard anti-join is applied to the KEYS, below the build kernel —
-    filtering the kernel's *output* rows instead would re-run every shard's
-    construction and discard the results (Catalyst cannot push an anti-join
-    under a Python UDF).
+    The done-shard anti-join is applied to the KEYS, below the build kernel
+    (see ``_build_shards``).
     """
     if "shard_bits" not in build_kwargs:
         raise ValueError("resumable builds require explicit shard_bits")
+    args = _call_args(build_forest, keys_df, **build_kwargs)
     try:
         done = spark.read.parquet(path).select("shard").dropDuplicates()
     except AnalysisException as e:
@@ -431,25 +460,10 @@ def build_forest_resumable(
             pass
         if "PATH_NOT_FOUND" not in cond and "PATH_NOT_FOUND" not in str(e):
             raise
-        write_forest(build_forest(keys_df, **build_kwargs), path)
-        return spark.read.parquet(path)
-    kwargs = dict(build_kwargs)
-    shard_bits = kwargs.pop("shard_bits")
-    route = kwargs.pop("route", "xxh64")
-    key_name = kwargs.pop("key_name", "key")
-    kwargs.pop("target_keys_per_shard", None)
-    kwargs.pop("min_shards", None)
-    if kwargs.pop("pre_dedup", False):
-        keys_df = dedup_keys(keys_df, key_name)
-    sharded = keys_df.select(F.col(key_name).alias("key")).withColumn(
-        "shard", shard_column("key", shard_bits, route)
-    )
-    missing_keys = sharded.join(F.broadcast(done), on="shard", how="left_anti")
-    spec = ForestSpec(shard_bits=shard_bits, route=route, **kwargs)
-    missing = missing_keys.groupBy("shard").applyInPandas(
-        _kernel_factory(spec), FOREST_SCHEMA
-    )
-    write_forest(missing, path)
+        done = None
+    sharded = _sharded_keys(keys_df, args["key_name"], args["shard_bits"],
+                            args["route"], args["pre_dedup"])
+    write_forest(_build_shards(sharded, _spec_from(args), done=done), path)
     return spark.read.parquet(path)
 
 
@@ -467,7 +481,7 @@ def build_forest_budgeted_resumable(
     fresh full build despite the plan deriving from approximate counts
     (the same determinism contract as ``build_forest_resumable``). Missing
     shards are discovered by anti-joining the sink, exactly like the
-    uniform-width resumable path.
+    uniform-width resumable path; when none is missing, nothing is written.
 
     Local/NFS sink paths only for the plan file (same caveat as the
     streaming layout guard); for object-store sinks persist the plan with
@@ -482,11 +496,10 @@ def build_forest_budgeted_resumable(
             "cannot be co-located; persist the plan in your job state and "
             "call build_forest_budgeted(widths=...) instead"
         )
+    args = _call_args(build_forest_budgeted, keys_df, budget_bytes, shard_bits,
+                      **build_kwargs)
     os.makedirs(path, exist_ok=True)
     plan_path = os.path.join(path, "_sparkfuse_widths.json")
-    key_name = build_kwargs.get("key_name", "key")
-    route = build_kwargs.get("route", "xxh64")
-    arity = build_kwargs.get("arity", 3)
     # the sink dir always exists here (it holds the plan file), so "fresh"
     # is detected by the absence of data files, not by a read failure —
     # any read error over actual data files must propagate
@@ -494,7 +507,9 @@ def build_forest_budgeted_resumable(
         not f.startswith(("_", ".")) for f in os.listdir(path)
     )
     params = {"shard_bits": shard_bits, "budget_bytes": budget_bytes,
-              "route": route, "arity": arity}
+              "route": args["route"], "arity": args["arity"]}
+    sharded = _sharded_keys(keys_df, args["key_name"], shard_bits, args["route"],
+                            args["pre_dedup"])
     if os.path.exists(plan_path):
         with open(plan_path) as f:
             saved = json.load(f)
@@ -518,38 +533,17 @@ def build_forest_budgeted_resumable(
             "plan persisted in your job state."
         )
     else:
-        sharded = keys_df.select(F.col(key_name).alias("key")).withColumn(
-            "shard", shard_column("key", shard_bits, route)
-        )
-        widths = _plan_widths(sharded, budget_bytes, arity)
+        widths = _plan_widths(sharded, budget_bytes, args["arity"])
         with open(plan_path, "w") as f:
             json.dump(
                 params | {"widths": {str(s): w for s, w in widths.items()}}, f
             )
-    done = (
-        spark.read.parquet(path).select("shard").dropDuplicates()
-        if has_data
-        else None
-    )
-    build_keys = keys_df
-    kwargs = dict(build_kwargs)
-    if done is not None and not done.isEmpty():
-        # filter the KEYS of already-built shards out below the kernel
-        # (filtering the kernel OUTPUT would re-run and discard every shard)
-        key_name = kwargs.pop("key_name", "key")
-        route = kwargs.get("route", "xxh64")
-        sharded_keys = keys_df.select(F.col(key_name).alias("key")).withColumn(
-            "shard", shard_column("key", shard_bits, route)
-        )
-        build_keys = sharded_keys.join(
-            F.broadcast(done), "shard", "left_anti"
-        ).drop("shard")
-        if build_keys.isEmpty():
+    done = None
+    if has_data:
+        done = spark.read.parquet(path).select("shard").dropDuplicates()
+        if _unbuilt(sharded, done).isEmpty():
             return spark.read.parquet(path)
-    built = build_forest_budgeted(
-        build_keys, budget_bytes, shard_bits, widths=widths, **kwargs
-    )
-    write_forest(built, path)
+    write_forest(_build_shards(sharded, _spec_from(args), widths, done), path)
     return spark.read.parquet(path)
 
 
@@ -559,6 +553,33 @@ def build_forest_budgeted_resumable(
 
 # A replayed row repeats its payload bytes, recorded sha and decode parameters.
 _REPLAY_FIELDS = ("kind", "width", "arity", "payload", "content_sha256")
+# Every row of a forest shares these: they define the routing and probe math.
+_LAYOUT_FIELDS = ("kind", "arity", "shard_bits", "route")
+
+
+def _uniform_layout(rows) -> dict:
+    """The forest's one {kind, arity, shard_bits, route}, or a ValueError
+    when its rows disagree. Width MAY vary per shard (budgeted mixed-width
+    forests)."""
+    layouts = {tuple(r[f] for f in _LAYOUT_FIELDS) for r in rows}
+    if len(layouts) != 1:
+        raise ValueError(f"inhomogeneous forest: {sorted(layouts)}")
+    return dict(zip(_LAYOUT_FIELDS, layouts.pop()))
+
+
+def _check_payload_sha(rows, source: str | None = None) -> None:
+    """Raise unless every row's payload hashes to its recorded
+    content_sha256. A flipped fingerprint byte still deserializes and
+    probes — as false negatives — so every read of forest rows from a table
+    or a sink checks them (``Forest(rows)`` over in-memory rows does not).
+    ``source`` (a sink path) names where the rows came from."""
+    for r in rows:
+        if hashlib.sha256(r["payload"]).hexdigest() != r["content_sha256"]:
+            where = f"forest sink {source!r}" if source else "forest table"
+            raise ValueError(
+                f"corrupted {where}: the payload of shard {r['shard']} "
+                "does not match its content_sha256"
+            )
 
 
 def _decode_shard_rows(rows, source: str | None = None) -> dict:
@@ -588,12 +609,8 @@ def _decode_shard_rows(rows, source: str | None = None) -> dict:
                     "or an epoch-appended sink — read those with EpochForest)"
                 )
             continue
-        payload = bytes(r["payload"])
-        if r["kind"] == "fuse":
-            filt = load_fuse_bytes(payload, width=r["width"], arity=r["arity"])
-        else:
-            filt = load_xor_bytes(payload)
-        decoded[shard] = (r, filt)
+        _, _, load = _kind(r["kind"])
+        decoded[shard] = (r, load(bytes(r["payload"]), r))
     return decoded
 
 
@@ -615,21 +632,17 @@ class Forest:
         rows = [r for r, _ in decoded.values()]
         self.filters = {s: filt for s, (_, filt) in decoded.items()}
         self.widths = {s: int(r["width"]) for s, (r, _) in decoded.items()}
-        kinds = {(r["kind"], r["arity"], r["route"]) for r in rows}
-        bits = {r["shard_bits"] for r in rows}
-        # widths MAY vary per shard (budgeted forests); kind/arity/route/
-        # shard_bits must not — they change the routing/probe math itself
-        if len(kinds) != 1 or len(bits) != 1:
-            raise ValueError(f"inhomogeneous forest: kinds={kinds} shard_bits={bits}")
-        (self.kind, self.arity, self.route), = kinds
-        (self.shard_bits,) = bits
+        self.kind, self.arity, self.shard_bits, self.route = _uniform_layout(rows).values()
         self.width = max(self.widths.values())  # widest member (informational)
         self.nkeys = sum(r["nkeys"] for r in rows)
         self.size_in_bytes = sum(len(r["payload"]) for r in rows)
 
     @classmethod
     def from_df(cls, forest_df: DataFrame) -> "Forest":
-        return cls([r.asDict() for r in forest_df.collect()])
+        rows = [r.asDict() for r in forest_df.collect()]
+        forest = cls(rows)  # a shard's rows all agree past here, or it raised
+        _check_payload_sha(rows)
+        return forest
 
     def __getstate__(self):
         # the packed-probe cache duplicates every fingerprint array; drop it
@@ -641,39 +654,35 @@ class Forest:
 
     def _packed(self):
         """Lazily concatenate shard fingerprint arrays into ONE array PER
-        WIDTH GROUP plus per-shard parameter vectors, so a probe batch
-        routes with pure gathers — no per-shard loop, no argsort.
-        Slot_global = offset[shard] + slot_local; per-element layout params
-        come from tiny gathers. A shard belongs to exactly one width group
-        (mixed widths exist only in budgeted forests; the common
-        uniform-width forest has a single group — identical cost to the
-        old single-pack layout)."""
+        WIDTH GROUP, plus per-shard vectors (offset, seed, and one per
+        layout field in that field's dtype — ``FuseFilter.layout``), so a
+        probe batch routes with pure gathers — no per-shard loop, no
+        argsort. A key's slots are its filter kind's slot derivation over
+        its shard's gathered layout, read at offset[shard] in the packed
+        array. A shard belongs to exactly one width group (mixed widths
+        exist only in budgeted forests; the common uniform-width forest has
+        a single group). Each group keeps one of its filters, whose
+        ``slots`` derives the group's slots."""
         if getattr(self, "_pack_cache", None) is not None:
             return self._pack_cache
         space = 1 << max(self.shard_bits, 0)
         groups = []
         for width in sorted(set(self.widths.values())):
+            members = [(s, f) for s, f in sorted(self.filters.items())
+                       if self.widths[s] == width]
+            rep = members[0][1]
             offsets = np.full(space, -1, dtype=np.int64)
             seeds = np.zeros(space, dtype=np.uint64)
-            p1 = np.zeros(space, dtype=np.uint64)  # fuse: scl | xor: block_len
-            p2 = np.zeros(space, dtype=np.uint32)  # fuse: seg | xor: unused
-            p3 = np.zeros(space, dtype=np.uint32)  # fuse: mask| xor: unused
-            fps = []
+            layout = tuple(np.zeros(space, dtype=field.dtype) for field in rep.layout)
             pos = 0
-            for s, f in sorted(self.filters.items()):
-                if self.widths[s] != width:
-                    continue
+            for s, f in members:
                 offsets[s] = pos
                 seeds[s] = np.uint64(f.seed)
-                if self.kind == "fuse":
-                    p1[s] = np.uint64(f.segment_count_length)
-                    p2[s] = np.uint32(f.segment_length)
-                    p3[s] = np.uint32(f.segment_length_mask)
-                else:
-                    p1[s] = np.uint64(f.block_length)
-                fps.append(f.fingerprints)
+                for vector, field in zip(layout, f.layout):
+                    vector[s] = field
                 pos += len(f.fingerprints)
-            groups.append((offsets, seeds, p1, p2, p3, np.concatenate(fps)))
+            packed = np.concatenate([f.fingerprints for _, f in members])
+            groups.append((offsets, seeds, layout, packed, rep))
         self._pack_cache = groups
         return self._pack_cache
 
@@ -685,56 +694,19 @@ class Forest:
             return out
         if self.shard_bits <= 0:
             filt = self.filters.get(0)
-            if filt is None:
-                return out
-            return _probe_one(filt, keys)
+            return out if filt is None else filt.contains(keys)
         routed = xxh64_u64(keys) if self.route == "xxh64" else keys
         sh = (routed >> np.uint64(64 - self.shard_bits)).astype(np.int64)
-        for offsets, seeds, p1, p2, p3, packed in self._packed():
+        for offsets, seeds, layout, packed, rep in self._packed():
             off = offsets[sh]
             valid = off >= 0
             if not valid.any():
                 continue
-            k = keys[valid]
             shv = sh[valid]
-            o = off[valid].astype(np.uint64)
-            h = murmur64(k + seeds[shv])  # mixsplit with per-element seed
-            f64 = h ^ (h >> np.uint64(32))
-            if self.kind == "fuse":
-                scl = p1[shv]
-                seg = p2[shv]
-                mask = p3[shv]
-                hi = h >> np.uint64(32)
-                lo = h & np.uint64(0xFFFFFFFF)
-                h0 = ((hi * scl) + ((lo * scl) >> np.uint64(32))) >> np.uint64(32)
-                shifts = (18, 0) if self.arity == 3 else (36, 18, 0)
-                h0_32 = h0.astype(np.uint32)
-                acc = f64.astype(packed.dtype) ^ packed[o + h0]
-                for lane, shf in enumerate(shifts, start=1):
-                    sl = (h >> np.uint64(shf)).astype(np.uint32) & mask
-                    loc = (h0_32 + np.uint32(lane) * seg) ^ sl
-                    acc ^= packed[o + loc]
-                out[valid] = acc == 0
-            else:
-                blk = p1[shv]
-                r0 = ((h & np.uint64(0xFFFFFFFF)) * blk) >> np.uint64(32)
-                r1 = ((rotl64(h, 21) & np.uint64(0xFFFFFFFF)) * blk) >> np.uint64(32)
-                r2 = ((rotl64(h, 42) & np.uint64(0xFFFFFFFF)) * blk) >> np.uint64(32)
-                got = (
-                    packed[o + r0]
-                    ^ packed[o + blk + r1]
-                    ^ packed[o + np.uint64(2) * blk + r2]
-                )
-                out[valid] = f64.astype(packed.dtype) == got
+            h = murmur64(keys[valid] + seeds[shv])  # mixsplit with per-key seed
+            slots = rep.slots(h, tuple(vector[shv] for vector in layout))
+            out[valid] = _verdict(packed, h, slots, off[valid])
         return out
 
     def bits_per_entry(self) -> float:
         return self.size_in_bytes * 8 / max(self.nkeys, 1)
-
-
-def _probe_one(filt, keys_u64: np.ndarray) -> np.ndarray:
-    if isinstance(filt, FuseFilter):
-        return fuse_contains(filt, keys_u64)
-    if isinstance(filt, XorFilter):
-        return xor_contains(filt, keys_u64)
-    raise TypeError(type(filt))

@@ -123,7 +123,8 @@ def fingerprint64(hashes: np.ndarray) -> np.ndarray:
 
 
 def mulhi64_u32(hashes: np.ndarray, m: int) -> np.ndarray:
-    """High 64 bits of (hash * m) for m < 2^32, truncated to uint32.
+    """High 64 bits of (hash * m) for m < 2^32, truncated to uint32. ``m``
+    may also be a uint64 array, one multiplier per hash.
 
     Exact in uint64 arithmetic: split hash into hi/lo 32-bit halves;
     mulhi64(h, m) = (hi*m + ((lo*m) >> 32)) >> 32, every product < 2^64.

@@ -32,7 +32,7 @@ giant one.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 
@@ -42,17 +42,10 @@ from sparkfuse.hashing import (
     mixsplit,
     mulhi64_u32,
     murmur64_scalar,
-    reduce32,
     rotl64,
     seed_sequence,
 )
-from sparkfuse.params import (
-    MAX_ITERATIONS,
-    FuseParams,
-    XorParams,
-    fuse_parameters,
-    xor_parameters,
-)
+from sparkfuse.params import MAX_ITERATIONS, fuse_parameters, xor_parameters
 
 _DTYPES = {8: np.uint8, 16: np.uint16, 32: np.uint32}
 
@@ -63,8 +56,31 @@ def _dtype_for_width(width: int, allowed=(8, 16, 32)):
     return _DTYPES[width]
 
 
+class _Filter:
+    """What both filter kinds share: a fingerprint array gathered at the
+    slots ``slots(hashes)`` derives from a key's seeded hash. Construction
+    peels through the same ``slots`` that ``contains`` probes through, as
+    the reference's getHashFromHash serves both (reference
+    binaryfusefilter.go:370-378)."""
+
+    @property
+    def size_in_bytes(self) -> int:
+        return int(self.fingerprints.nbytes)
+
+    def bits_per_entry(self, n: int) -> float:
+        return self.fingerprints.nbytes * 8 / max(n, 1)
+
+    def contains(self, keys) -> np.ndarray:
+        """Vectorized membership probe (P1-P3): zero means 'probably in'."""
+        keys = np.asarray(keys, dtype=np.uint64)
+        if len(keys) == 0:
+            return np.zeros(0, dtype=bool)
+        h = mixsplit(keys, self.seed)
+        return _verdict(self.fingerprints, h, self.slots(h))
+
+
 @dataclass
-class FuseFilter:
+class FuseFilter(_Filter):
     """Immutable binary fuse filter (3-wise or 4-wise), width 8/16/32 bits.
 
     Field roles mirror /root/reference/binaryfusefilter.go:14-22."""
@@ -79,18 +95,25 @@ class FuseFilter:
     fingerprints: np.ndarray  # dtype uint{width}
 
     @property
-    def size_in_bytes(self) -> int:
-        return int(self.fingerprints.nbytes)
+    def layout(self) -> tuple:
+        """The slot derivation's layout fields, each in its probe dtype:
+        (segment_count_length u64, segment_length u32, segment_length_mask
+        u32)."""
+        return (
+            np.uint64(self.segment_count_length),
+            np.uint32(self.segment_length),
+            np.uint32(self.segment_length_mask),
+        )
 
-    def bits_per_entry(self, n: int) -> float:
-        return self.fingerprints.nbytes * 8 / max(n, 1)
-
-    def contains(self, keys) -> np.ndarray:
-        return fuse_contains(self, np.asarray(keys, dtype=np.uint64))
+    def slots(self, hashes: np.ndarray, layout: tuple | None = None) -> np.ndarray:
+        """This filter's slots — or, with ``layout`` (per-key vectors of the
+        layout fields), the slots of keys spread over several filters of
+        this kind and arity."""
+        return _fuse_slots(hashes, self.arity, *(self.layout if layout is None else layout))
 
 
 @dataclass
-class XorFilter:
+class XorFilter(_Filter):
     """Immutable xor filter, width 8 or 16 bits ("xor8"/"xor16").
 
     The reference ships only Xor8 (/root/reference/xorfilter_definitions.go:4-8);
@@ -103,22 +126,25 @@ class XorFilter:
     fingerprints: np.ndarray
 
     @property
-    def size_in_bytes(self) -> int:
-        return int(self.fingerprints.nbytes)
+    def layout(self) -> tuple:
+        """(block_length u64,): see ``FuseFilter.layout``."""
+        return (np.uint64(self.block_length),)
 
-    def bits_per_entry(self, n: int) -> float:
-        return self.fingerprints.nbytes * 8 / max(n, 1)
-
-    def contains(self, keys) -> np.ndarray:
-        return xor_contains(self, np.asarray(keys, dtype=np.uint64))
+    def slots(self, hashes: np.ndarray, layout: tuple | None = None) -> np.ndarray:
+        """See ``FuseFilter.slots``."""
+        return _xor_slots(hashes, *(self.layout if layout is None else layout))
 
 
 # ---------------------------------------------------------------------------
-# slot derivation
+# slot derivation and the gather
 # ---------------------------------------------------------------------------
+# The layout arguments are scalars (one filter) or per-key arrays (keys of
+# several filters, the packed forest probe), each in its native dtype: a
+# converted or widened layout vector costs a copy per probe batch.
 
-def _fuse_slots(hashes: np.ndarray, p: FuseParams) -> np.ndarray:
-    """(arity, n) absolute slot indices.
+def _fuse_slots(hashes: np.ndarray, arity: int, scl, seg, mask) -> np.ndarray:
+    """(arity, n) slot indices for segment_count_length ``scl`` (u64),
+    segment length ``seg`` and mask ``mask`` (u32).
 
     Arity 3 mirrors getHashFromHash (/root/reference/binaryfusefilter.go:370-378):
     h0 = mulhi(hash, SegmentCountLength); h1/h2 = next segments xor'd with
@@ -126,32 +152,38 @@ def _fuse_slots(hashes: np.ndarray, p: FuseParams) -> np.ndarray:
     reference at binaryfusefilter.go:398,407-408 but no build path): same
     scheme with slices at shifts 36/18/0.
     """
-    mask = np.uint32(p.segment_length_mask)
-    h0 = mulhi64_u32(hashes, p.segment_count_length)
-    out = np.empty((p.arity, len(hashes)), dtype=np.uint32)
+    h0 = mulhi64_u32(hashes, scl)
+    out = np.empty((arity, len(hashes)), dtype=np.uint32)
     out[0] = h0
-    if p.arity == 3:
-        shifts = (18, 0)
-    else:
-        shifts = (36, 18, 0)
-    seg = np.uint32(p.segment_length)
-    for lane, sh in enumerate(shifts, start=1):
-        sl = (hashes >> np.uint64(sh)).astype(np.uint32) & mask
+    for lane, sh in enumerate((18, 0) if arity == 3 else (36, 18, 0), start=1):
         out[lane] = h0 + np.uint32(lane) * seg
-        out[lane] ^= sl
+        out[lane] ^= (hashes >> np.uint64(sh)).astype(np.uint32) & mask
     return out
 
 
-def _xor_slots(hashes: np.ndarray, p: XorParams) -> np.ndarray:
-    """(3, n) absolute slot indices for the xor layout
-    (/root/reference/xorfilter.go:45-84): 3 equal blocks, lanes from
-    rotations 0/21/42, Lemire fast-range into each block."""
-    b = p.block_length
+def _xor_slots(hashes: np.ndarray, block_length) -> np.ndarray:
+    """(3, n) slot indices for the xor layout
+    (reference xorfilter.go:45-84): 3 equal blocks of ``block_length``
+    (u64), lanes from rotations 0/21/42, Lemire fast-range into each block."""
+    low = np.uint64(0xFFFFFFFF)
     out = np.empty((3, len(hashes)), dtype=np.uint32)
-    out[0] = reduce32(hashes.astype(np.uint32), b)
-    out[1] = reduce32(rotl64(hashes, 21).astype(np.uint32), b) + np.uint32(b)
-    out[2] = reduce32(rotl64(hashes, 42).astype(np.uint32), b) + np.uint32(2 * b)
+    out[0] = ((hashes & low) * block_length) >> np.uint64(32)
+    for lane, rot in ((1, 21), (2, 42)):
+        r = ((rotl64(hashes, rot) & low) * block_length) >> np.uint64(32)
+        out[lane] = r + np.uint64(lane) * block_length
     return out
+
+
+def _verdict(fingerprints: np.ndarray, hashes: np.ndarray, slots: np.ndarray,
+             offset: np.ndarray | None = None) -> np.ndarray:
+    """The one gather (P1-P3, reference xorfilter.go:45-55,
+    binaryfusefilter.go:380-387): xor each key's fingerprint with the
+    fingerprints at its slots — at ``offset + slot`` when ``fingerprints``
+    packs several filters — and zero means 'probably in'."""
+    acc = fingerprint64(hashes).astype(fingerprints.dtype)
+    for lane in slots:
+        acc ^= fingerprints[lane if offset is None else offset + lane]
+    return acc == 0
 
 
 # ---------------------------------------------------------------------------
@@ -308,6 +340,25 @@ def _peel_and_assign(
 # public builds
 # ---------------------------------------------------------------------------
 
+def _build_unique(ukeys: np.ndarray, dtype, attempt, workspace: BuildWorkspace | None):
+    """The one reseed loop of the vectorized builds. Attempt ``i`` (from 1)
+    hashes the keys with the i-th seed of the splitmix64 schedule from
+    counter 1 and peels through ``attempt(i)`` = (filter shell: the
+    attempt's layout, no seed or fingerprints yet; capacity). The first
+    attempt that peels returns ``(filter, iterations)``; past MAX_ITERATIONS
+    it raises (reference xorfilter.go:102-104)."""
+    ws = workspace if workspace is not None else _DEFAULT_WS
+    seeds = seed_sequence(1)
+    for iterations in range(1, MAX_ITERATIONS + 1):
+        shell, capacity = attempt(iterations)
+        seed = next(seeds)
+        hashes = np.unique(mixsplit(ukeys, seed))
+        fp = _peel_and_assign(hashes, shell.slots, capacity, dtype, ws)
+        if fp is not None:
+            return replace(shell, seed=seed, fingerprints=fp), iterations
+    raise RuntimeError("too many iterations")
+
+
 def build_fuse(
     keys, width: int = 8, arity: int = 3, workspace: BuildWorkspace | None = None
 ) -> tuple[FuseFilter, int]:
@@ -332,45 +383,25 @@ def build_fuse_unique(
     workspace: BuildWorkspace | None = None,
 ) -> tuple[FuseFilter, int]:
     """``build_fuse`` over sorted distinct u64 keys (``np.unique`` output)."""
-    ws = workspace if workspace is not None else _DEFAULT_WS
     dtype = _dtype_for_width(width)
     size = len(ukeys)
     base = fuse_parameters(size, arity)
-    params = base
-    seeds = seed_sequence(1)
-    iterations = 0
-    while True:
-        iterations += 1
-        if iterations > MAX_ITERATIONS:
-            raise RuntimeError("too many iterations")
-        if 4 < size < 1_000_000:
-            # escape pathological segment sizes every 4 iterations
-            # (/root/reference/binaryfusefilter.go:122-141)
-            if iterations % 4 == 2:
-                params = params.with_segment_length(params.segment_length // 2)
-            elif iterations % 4 == 3:
-                params = params.with_segment_length(params.segment_length * 2)
-        seed = next(seeds)
-        hashes = np.unique(mixsplit(ukeys, seed))
-        fp = _peel_and_assign(
-            hashes,
-            lambda h, p=params: _fuse_slots(h, p),
-            params.array_length,
-            dtype,
-            ws,
+    halved = base.with_segment_length(base.segment_length // 2)
+
+    def attempt(i: int):
+        # escape pathological segment sizes: every 4th attempt from the 2nd
+        # halves the segment length and the next one restores it
+        # (reference binaryfusefilter.go:122-141)
+        p = halved if 4 < size < 1_000_000 and i % 4 == 2 else base
+        shell = FuseFilter(
+            width=width, arity=arity, seed=0, segment_length=p.segment_length,
+            segment_length_mask=p.segment_length_mask,
+            segment_count=p.segment_count,
+            segment_count_length=p.segment_count_length, fingerprints=None,
         )
-        if fp is not None:
-            return FuseFilter(
-                width=width,
-                arity=arity,
-                seed=seed,
-                segment_length=params.segment_length,
-                segment_length_mask=params.segment_length_mask,
-                segment_count=params.segment_count,
-                segment_count_length=params.segment_count_length,
-                fingerprints=fp,
-            ), iterations
-    # unreachable
+        return shell, p.array_length
+
+    return _build_unique(ukeys, dtype, attempt, workspace)
 
 
 def build_xor(
@@ -389,76 +420,24 @@ def build_xor_unique(
     ukeys: np.ndarray, width: int = 8, workspace: BuildWorkspace | None = None
 ) -> tuple[XorFilter, int]:
     """``build_xor`` over sorted distinct u64 keys (``np.unique`` output)."""
-    ws = workspace if workspace is not None else _DEFAULT_WS
     dtype = _dtype_for_width(width, allowed=(8, 16))
-    size = len(ukeys)
-    if size == 0:
+    if len(ukeys) == 0:
         raise ValueError("provide a non-empty set")
-    params = xor_parameters(size)
-    seeds = seed_sequence(1)
-    iterations = 0
-    while True:
-        iterations += 1
-        if iterations > MAX_ITERATIONS:
-            raise RuntimeError("too many iterations")
-        seed = next(seeds)
-        hashes = np.unique(mixsplit(ukeys, seed))
-        fp = _peel_and_assign(
-            hashes,
-            lambda h, p=params: _xor_slots(h, p),
-            params.array_length,
-            dtype,
-            ws,
-        )
-        if fp is not None:
-            return XorFilter(
-                width=width,
-                seed=seed,
-                block_length=params.block_length,
-                fingerprints=fp,
-            ), iterations
+    p = xor_parameters(len(ukeys))
+    shell = XorFilter(width=width, seed=0, block_length=p.block_length, fingerprints=None)
+    return _build_unique(ukeys, dtype, lambda i: (shell, p.array_length), workspace)
 
-
-# ---------------------------------------------------------------------------
-# probes
-# ---------------------------------------------------------------------------
 
 def fuse_contains(f: FuseFilter, keys: np.ndarray) -> np.ndarray:
     """Vectorized membership probe (P2/P3,
     /root/reference/binaryfusefilter.go:380-387): gather 3 (or 4)
     fingerprints, xor with the key fingerprint, zero means 'probably in'."""
-    if len(keys) == 0:
-        return np.zeros(0, dtype=bool)
-    h = mixsplit(np.asarray(keys, dtype=np.uint64), f.seed)
-    p = FuseParams(
-        arity=f.arity,
-        segment_length=f.segment_length,
-        segment_length_mask=f.segment_length_mask,
-        segment_count=f.segment_count,
-        segment_count_length=f.segment_count_length,
-        array_length=len(f.fingerprints),
-    )
-    slots = _fuse_slots(h, p)
-    acc = fingerprint64(h).astype(f.fingerprints.dtype)
-    for lane in range(slots.shape[0]):
-        acc = acc ^ f.fingerprints[slots[lane]]
-    return acc == 0
+    return f.contains(keys)
 
 
 def xor_contains(f: XorFilter, keys: np.ndarray) -> np.ndarray:
     """Vectorized xor probe (P1, /root/reference/xorfilter.go:45-55)."""
-    if len(keys) == 0:
-        return np.zeros(0, dtype=bool)
-    h = mixsplit(np.asarray(keys, dtype=np.uint64), f.seed)
-    p = XorParams(block_length=f.block_length, array_length=len(f.fingerprints))
-    slots = _xor_slots(h, p)
-    expect = fingerprint64(h).astype(f.fingerprints.dtype)
-    got = (
-        f.fingerprints[slots[0]]
-        ^ f.fingerprints[slots[1]]
-        ^ f.fingerprints[slots[2]]
-    )
-    return expect == got
+    return f.contains(keys)
 
 
 # ---------------------------------------------------------------------------

@@ -67,7 +67,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
-from sparkfuse.forest import Forest, _decode_shard_rows, _probe_one
+from sparkfuse.forest import (
+    _LAYOUT_FIELDS,
+    Forest,
+    _check_payload_sha,
+    _decode_shard_rows,
+    _uniform_layout,
+)
 from sparkfuse.hashing import to_u64
 from sparkfuse.keys import shard_column
 
@@ -263,17 +269,6 @@ def _plan_token_or_fallback(sink_path: str) -> str:
     return _plan_token_for(_sink_listing_or_none(sink_path))
 
 
-def _check_payload_sha(path: str, shard, payload: bytes, sha: str) -> None:
-    """Raise unless ``payload`` hashes to the row's recorded content_sha256.
-    A flipped fingerprint byte still deserializes and probes — as false
-    negatives — so a sink load is the place to catch it."""
-    if hashlib.sha256(payload).hexdigest() != sha:
-        raise ValueError(
-            f"corrupted forest sink {path!r}: the payload of shard {shard} "
-            "does not match its content_sha256"
-        )
-
-
 def _read_sink(
     path: str, filesystem, data_files, build, max_bytes: int | None, shard=None
 ):
@@ -299,8 +294,7 @@ def _read_sink(
             return _STOPPED, nbytes
         batches.append(batch)
     rows = pa.Table.from_batches(batches, schema=dataset.schema).to_pylist()
-    for r in rows:
-        _check_payload_sha(path, r["shard"], r["payload"], r["content_sha256"])
+    _check_payload_sha(rows, path)
     return build(rows), nbytes
 
 
@@ -541,14 +535,7 @@ def _forest_meta(forest_df: DataFrame) -> dict:
     probe math); width MAY vary per shard (budgeted mixed-width forests) and
     travels per-row through the cogroup instead.
     """
-    rows = (
-        forest_df.select("kind", "arity", "shard_bits", "route")
-        .dropDuplicates()
-        .collect()
-    )
-    if len(rows) != 1:
-        raise ValueError(f"inhomogeneous forest: {rows}")
-    return rows[0].asDict()
+    return _uniform_layout(forest_df.select(*_LAYOUT_FIELDS).dropDuplicates().collect())
 
 
 def approx_contains_routed(
@@ -599,9 +586,12 @@ def approx_contains_routed(
         keys_np = probe_tbl.column(key).to_numpy(zero_copy_only=False)
         verdict = np.zeros(len(keys_np), dtype=bool)
         if forest_tbl.num_rows and len(keys_np):
-            # one shard's rows: replays decode once, a conflict raises
-            ((_, filt),) = _decode_shard_rows(forest_tbl.to_pylist()).values()
-            verdict = _probe_one(filt, to_u64(keys_np))
+            # one shard's rows: replays decode once, a conflict raises, and
+            # the payload read from the table must match its sha
+            rows = forest_tbl.to_pylist()
+            ((_, filt),) = _decode_shard_rows(rows).values()
+            _check_payload_sha(rows)
+            verdict = filt.contains(to_u64(keys_np))
         return pa.table(
             [probe_tbl.column(c) for c in cols] + [pa.array(verdict)],
             names=cols + [out],
@@ -640,15 +630,9 @@ def _sink_forest_meta(sink_path: str, listing=None) -> tuple[dict, str]:
     filesystem, data_files, content_key = listing or _sink_fingerprint(sink_path)
     meta = _SINK_META_CACHE.get(content_key)
     if meta is None:
-        cols = ["kind", "arity", "shard_bits", "route"]
-        tbl = pads.dataset(
+        meta = _uniform_layout(pads.dataset(
             data_files, filesystem=filesystem, format="parquet"
-        ).to_table(columns=cols)
-        distinct = set(zip(*(tbl.column(c).to_pylist() for c in cols)))
-        if len(distinct) != 1:
-            raise ValueError(f"inhomogeneous forest: {sorted(distinct)}")
-        (layout,) = distinct
-        meta = dict(zip(cols, layout))
+        ).to_table(columns=list(_LAYOUT_FIELDS)).to_pylist())
         _cache_put(_SINK_META_CACHE, _SINK_CACHE_MAX, {content_key: meta})
     return meta, _sink_plan_token(content_key)
 
@@ -765,7 +749,7 @@ def _approx_contains_routed_sink(
             filt = _load_shard_filter_from_sink(sink_path, plan_token, int(s))
             if filt is not None:
                 mask = shards == s
-                verdict[mask] = _probe_one(filt, to_u64(keys[mask]))
+                verdict[mask] = filt.contains(to_u64(keys[mask]))
         return verdict
 
     tagged = probe_df.withColumn("_sf_shard", shard_column(key, shard_bits, route))

@@ -21,7 +21,7 @@ import struct
 
 import numpy as np
 
-from sparkfuse.kernels import FuseFilter, XorFilter
+from sparkfuse.kernels import FuseFilter, XorFilter, _dtype_for_width
 
 _FUSE_HEADER = struct.Struct("<QIIIII")
 _XOR_HEADER = struct.Struct("<QIII")  # seed, width, block_length, fp_len
@@ -54,7 +54,7 @@ def load_fuse_bytes(data: bytes, width: int, arity: int = 3) -> FuseFilter:
         segment_count_length,
         fp_len,
     ) = _FUSE_HEADER.unpack_from(data, 0)
-    dtype = {8: np.uint8, 16: np.uint16, 32: np.uint32}[width]
+    dtype = _dtype_for_width(width)
     body = data[_FUSE_HEADER.size:_FUSE_HEADER.size + fp_len * dtype().nbytes]
     fingerprints = np.frombuffer(body, dtype=dtype).copy()
     if len(fingerprints) != fp_len:
@@ -79,7 +79,7 @@ def save_xor_bytes(f: XorFilter) -> bytes:
 
 def load_xor_bytes(data: bytes) -> XorFilter:
     seed, width, block_length, fp_len = _XOR_HEADER.unpack_from(data, 0)
-    dtype = {8: np.uint8, 16: np.uint16}[width]
+    dtype = _dtype_for_width(width, allowed=(8, 16))
     body = data[_XOR_HEADER.size:_XOR_HEADER.size + fp_len * dtype().nbytes]
     fingerprints = np.frombuffer(body, dtype=dtype).copy()
     if len(fingerprints) != fp_len:

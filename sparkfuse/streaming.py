@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
-from sparkfuse.forest import Forest, build_forest, write_forest
+from sparkfuse.forest import Forest, _check_payload_sha, build_forest, write_forest
 
 
 def forest_append_batch(
@@ -133,8 +133,12 @@ class EpochForest:
         (bounded epoch count); for long-running uncompacted streams the
         row count grows without bound and the driver becomes the ceiling —
         probe those through ``probe.approx_contains_epoch_sink``, which
-        loads the sink worker-side (no driver bytes, no key shuffle)."""
-        return cls(spark.read.parquet(path).collect(), shard_bits)
+        loads the sink worker-side (no driver bytes, no key shuffle).
+        Every payload is checked against its content_sha256."""
+        rows = spark.read.parquet(path).collect()
+        forest = cls(rows, shard_bits)
+        _check_payload_sha(rows, path)
+        return forest
 
     def contains_np(self, keys_i64):
         import numpy as np

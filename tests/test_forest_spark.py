@@ -466,6 +466,22 @@ def test_budgeted_resumable_resume_equals_fresh(spark, tmp_path):
         build_forest_budgeted(keys, budget, shard_bits=2, widths={0: 64})
 
 
+def test_budgeted_resumable_complete_sink_writes_nothing(spark, tmp_path):
+    import os
+
+    from sparkfuse.forest import build_forest_budgeted_resumable
+
+    keys = _keys_df(spark, 10_000)
+    path = str(tmp_path / "forest")
+    build_forest_budgeted_resumable(keys, path, spark, budget_bytes=1 << 20, shard_bits=1)
+    before = sorted(os.listdir(path))
+    again = build_forest_budgeted_resumable(
+        keys, path, spark, budget_bytes=1 << 20, shard_bits=1
+    )
+    assert sorted(os.listdir(path)) == before  # no shard missing: no append
+    assert again.count() == 2
+
+
 def test_exact_member_forest_all_regimes(spark, tmp_path):
     # planner-driven exact membership: identical result in every regime,
     # equal to the plain semi-join ground truth
@@ -899,6 +915,30 @@ def test_sink_load_rejects_flipped_payload_byte(spark, tmp_path, regime, kw):
         ).collect()
     msg = str(exc_info.value)
     assert "content_sha256" in msg and bad in msg and f"shard {shard}" in msg
+
+
+@pytest.mark.parametrize(
+    "probe",
+    [
+        lambda keys, forest_df, spark: probe_forest(keys, "key", forest_df, spark),
+        lambda keys, forest_df, spark: approx_contains_routed(keys, "key", forest_df),
+    ],
+    ids=["probe_forest_sinkless", "approx_contains_routed"],
+)
+def test_table_reads_reject_flipped_payload_byte(spark, tmp_path, probe):
+    # the sink-less paths read forest rows from a table: a flipped payload
+    # byte must fail by name there too, not probe as false negatives (the
+    # broadcast plan raises on the driver, the cogroup inside a task)
+    keys = _keys_df(spark, 10_000)
+    sink = str(tmp_path / "forest")
+    write_forest(build_forest(keys, shard_bits=2), sink)
+    bad = str(tmp_path / "corrupt")
+    shard = _flip_payload_byte(sink, bad)
+    with pytest.raises(Exception) as exc_info:
+        probe(keys, spark.read.parquet(bad), spark).collect()
+    msg = str(exc_info.value)
+    assert isinstance(exc_info.value, ValueError) or "ValueError" in msg
+    assert f"shard {shard} does not match its content_sha256" in msg
 
 
 # ---------------------------------------------------------------------------

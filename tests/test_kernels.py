@@ -272,3 +272,61 @@ def test_workspace_does_not_change_output():
     assert it_fresh == it_reused
     assert fresh.seed == reused.seed
     assert np.array_equal(fresh.fingerprints, reused.fingerprints)
+
+
+# ---------------------------------------------------------------------------
+# golden build bytes of the vectorized builds
+# ---------------------------------------------------------------------------
+
+# (kind, width, arity, n, counter, iterations, sha256 of the saved payload)
+# over ``golden_keys(n, counter)``. Recorded from the builds before their
+# two reseed loops were folded into one; the small inputs need 2-3 attempts,
+# so the fuse segment-halving schedule (attempt 2) and its restore
+# (attempt 3) are both pinned.
+GOLDEN_BUILDS = [
+    ("fuse", 8, 3, 2000, 1, 1, "fb174fcf26323a89a748129bfbeaf070603be1a660dd28bf527ab8a7702ecab9"),
+    ("fuse", 8, 3, 50, 33, 3, "1fe2fec5462b9f177f90d47dd102682e25eddff32c64b6efd3e94dd32d994dc0"),
+    ("fuse", 16, 3, 2000, 1, 1, "0f8969f644c226eb7a7fa29e5c45e09af5a38c10739132e7e5efd51161cb293a"),
+    ("fuse", 16, 3, 50, 33, 3, "09c1a98b49593f34efa170b452cf847739183c1c610b6cd1f74ef009211a20a2"),
+    ("fuse", 32, 3, 2000, 1, 1, "a956f6ddb1622206e4043e5951a21bf95202a04dc8bdc14dd28dca23d67e388e"),
+    ("fuse", 32, 3, 50, 33, 3, "f12600e140a7b14ffc2c71973dd9760005417e804755006310c7b9b4b80928b8"),
+    ("fuse", 8, 4, 2000, 1, 1, "70baa3dd9f9c4c74d38bf1cbed36b8660e509d41def9a032d5bb7ea233a0353c"),
+    ("fuse", 8, 4, 100, 3, 3, "f6fcffa53be39839b2894e647afe467ac0dd15d98a6d201c6b8f8af7cd682225"),
+    ("fuse", 16, 4, 2000, 1, 1, "30d6cb8819554866d9fb869db609db9f3d773a9386f6eab33e52344feebbef91"),
+    ("fuse", 16, 4, 100, 3, 3, "8fc8dda75cef1453970481d19cc54b8f365d701cd8b8953dc9810718f9f5c322"),
+    ("fuse", 32, 4, 2000, 1, 1, "9bee37fe7b52112980f3e4a6ee6c9a9a315a2d6d0581f0ccd72d75bb54ab7642"),
+    ("fuse", 32, 4, 100, 3, 3, "6333bb7689df92a5bcca6e8077693142b670ab9c109d48489b86f7a255a8c428"),
+    ("fuse", 8, 3, 0, 1, 1, "47324dae4d01e9d27ddea91b6c5e4657fbfef15f07e94d326fc3872f779a03a2"),
+    ("fuse", 8, 3, 100_000, 7, 1, "f5e4447419c59a1621a332cab224f532e6095f49987a0f26d7d9975a5cd5da1f"),
+    ("fuse", 8, 4, 100_000, 7, 1, "8c6fa680090c69fa766e0e32e8a8ccbe8876fcbde6731164205403255d9ec9c1"),
+    ("xor", 8, 3, 2000, 1, 1, "91deef173a0bdc04eb563ffb26b20e33558d4a8ff9d9a6d1acec7efdc24c8815"),
+    ("xor", 8, 3, 1000, 13, 2, "20ed7e65edcd9d73962cf01b56d910f701903d10c74044ccbd9f29a97da95a0b"),
+    ("xor", 8, 3, 50, 257, 3, "863d6a5ed664a4948b7f5c6cf366de19cb84cc0a72468e42ca15819f5169a08b"),
+    ("xor", 16, 3, 2000, 1, 1, "be7bb5eb9ed13a55840f8fc10364384a14e74c4050cdac5d8ab008731dd2ae37"),
+    ("xor", 16, 3, 1000, 13, 2, "62f30c651a329f10c4f1e44343131c4de33b659f9a3a5adc05a81f66a0000cc8"),
+    ("xor", 16, 3, 50, 257, 3, "2894b1de10917981850f0e1358d1ef3e9a7ab630bfc6906f268c6a1d00e31306"),
+    ("xor", 8, 3, 100_000, 7, 1, "71c039b681983c6effa98b57cf8752d14bb6b5a35679f2495f4d182fbe8553b1"),
+]
+
+
+def golden_keys(n, counter):
+    """n distinct splitmix64 keys followed by a third of them again."""
+    keys = splitmix64_fill(n, counter)
+    return np.concatenate([keys, keys[: n // 3]])
+
+
+@pytest.mark.parametrize("kind,width,arity,n,counter,iterations,sha", GOLDEN_BUILDS)
+def test_golden_build_bytes(kind, width, arity, n, counter, iterations, sha):
+    import hashlib
+
+    from sparkfuse.serialize import save_fuse_bytes, save_xor_bytes
+
+    keys = golden_keys(n, counter)
+    if kind == "fuse":
+        filt, got_iterations = build_fuse(keys, width=width, arity=arity)
+        payload = save_fuse_bytes(filt)
+    else:
+        filt, got_iterations = build_xor(keys, width=width)
+        payload = save_xor_bytes(filt)
+    assert got_iterations == iterations
+    assert hashlib.sha256(payload).hexdigest() == sha

@@ -4,7 +4,9 @@ import base64
 import struct
 
 import numpy as np
+import pytest
 
+from sparkfuse.hashing import splitmix64_fill
 from sparkfuse.kernels import build_fuse, build_fuse_reference_order, build_xor
 from sparkfuse.serialize import (
     load_fuse_bytes,
@@ -69,3 +71,14 @@ def test_xor_roundtrip():
         assert g.width == width and g.seed == f.seed
         assert np.array_equal(g.fingerprints, f.fingerprints)
         assert g.contains(keys).all()
+
+
+def test_load_rejects_unsupported_width_by_name():
+    fuse, _ = build_fuse(splitmix64_fill(100), width=8)
+    with pytest.raises(ValueError, match="fingerprint width must be one of"):
+        load_fuse_bytes(save_fuse_bytes(fuse), width=24)
+    xor, _ = build_xor(splitmix64_fill(100), width=8)
+    data = bytearray(save_xor_bytes(xor))
+    data[8:12] = (32).to_bytes(4, "little")  # the header's width field
+    with pytest.raises(ValueError, match="fingerprint width must be one of"):
+        load_xor_bytes(bytes(data))

@@ -442,3 +442,27 @@ def test_epoch_forest_probe_udf(spark, tmp_path):
     keys = spark.range(4000).select(F.xxhash64("id").alias("key"))
     flagged = approx_contains(keys, "key", ef, spark)
     assert flagged.filter(~F.col("maybe_member")).count() == 0
+
+
+def test_epoch_forest_load_rejects_flipped_payload_byte(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "forest")
+    keys = spark.range(4000).select(F.col("id").alias("k"))
+    forest_append_batch(keys, 0, path, ["k"], shard_bits=1)
+    table = pq.read_table(path)
+    rows = table.to_pylist()
+    payload = bytearray(rows[0]["payload"])
+    payload[-1] ^= 0xFF
+    rows[0]["payload"] = bytes(payload)
+    bad = str(tmp_path / "corrupt")
+    os.makedirs(bad)
+    pq.write_table(pa.Table.from_pylist(rows, schema=table.schema),
+                   os.path.join(bad, "part-0.parquet"))
+    with pytest.raises(
+        ValueError, match=f"shard {rows[0]['shard']} does not match its content_sha256"
+    ):
+        EpochForest.load(spark, bad, shard_bits=1)
