@@ -3,8 +3,9 @@
 Re-expresses the capabilities of FastFilter/xorfilter (xor8/xor16-class and
 binary-fuse filters, plus a Bloom baseline) as mergeable distributed
 aggregations over Spark DataFrames: vectorized numpy kernels driven through
-``groupBy(...).applyInPandas`` for construction, broadcast + vectorized gather
-for probes, and exact-confirm semi-joins for precise membership queries.
+``groupBy(...).applyInPandas`` for construction (one shard per task over a
+``repartitionById`` Exchange), broadcast + vectorized gather for probes, and
+exact-confirm semi-joins for precise membership queries.
 
 Reference behavior is cited per-function as ``/root/reference/<file>:<lines>``.
 No code is ported from the reference; the kernels re-derive the published

@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 )
 
 from sparkfuse.hashing import murmur64, to_u64
+from sparkfuse.keys import approx_distinct_keys
 
 _PARTIAL_SCHEMA = StructType(
     [
@@ -132,14 +133,13 @@ def build_bloom(
 ) -> BloomFilter:
     """Distributed mergeable Bloom build (partial bitmaps → tree OR-merge).
 
-    n_estimate: pre-sizing count; None → approx_count_distinct pre-pass
-    (the 'count-distinct sizing' row in SURVEY.md §2.5).
+    n_estimate: pre-sizing count; None → one-job HLL++ pre-pass
+    (``keys.approx_distinct_keys``, the 'count-distinct sizing' row in
+    SURVEY.md §2.5).
     """
     keys_df = keys_df.select(F.col(key_name).alias("key"))
     if n_estimate is None:
-        n_estimate = keys_df.agg(
-            F.approx_count_distinct("key").alias("n")
-        ).first()["n"]
+        n_estimate = approx_distinct_keys(keys_df)
     params = BloomParams.for_capacity(n_estimate, fpp)
 
     def make_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -9,10 +9,17 @@ same top-bits rule used to shard the build. This keeps every shard build
 small enough for one task (~17 B/key scratch, /root/reference/README.md:52)
 and makes the aggregation embarrassingly mergeable and resumable.
 
-Plan shape (one shuffle):
+Plan shape (one shuffle; a planned ``shard_bits`` adds one job before it,
+an HLL++ estimate observed on a ``noop`` write):
 
-    scan → xxhash64 key (codegen) → repartition(shard) →
-    applyInPandas(build_kernel) → forest rows (→ parquet sink)
+    scan → xxhash64 key, int shard id (codegen) →
+    repartitionById(2^shard_bits, shard) → groupBy(shard).applyInPandas(
+    build_kernel) → forest rows (→ parquet sink)
+
+``repartitionById`` gives every shard its own reduce partition, and the
+grouping reuses that Exchange. A hash-partitioned ``groupBy`` instead puts
+several shards in one partition and lets AQE coalesce the small ones, so a
+few-shard build ran its shard kernels one after another in a single task.
 
 Duplicates collapse inside the kernel (np.unique); optionally pre-dedup with
 dropDuplicates when the duplicate ratio is high enough that shuffle bytes
@@ -48,7 +55,7 @@ from pyspark.sql.types import (
 )
 
 from sparkfuse.hashing import murmur64, to_u64, xxh64_u64
-from sparkfuse.keys import dedup_keys, shard_column
+from sparkfuse.keys import approx_distinct_keys, dedup_keys, shard_column
 from sparkfuse.kernels import _verdict, build_fuse_unique, build_xor_unique
 from sparkfuse.serialize import (
     load_fuse_bytes,
@@ -74,6 +81,9 @@ FOREST_SCHEMA = StructType(
         StructField("content_sha256", StringType(), False),
     ]
 )
+
+# Shard ids are Spark partition ids (``_build_shards``), which are ints.
+MAX_SHARD_BITS = 30
 
 # Default shard sizing: ~2M keys/shard keeps fuse scratch ≈ 36 MB/task and
 # the per-shard filter ≈ 2.2 MB (fuse8) — SURVEY.md §4 memory model.
@@ -183,7 +193,13 @@ def _sharded_keys(
 ) -> DataFrame:
     """(key, shard) rows: ``keys_df[key_name]`` as ``key`` (deduplicated
     first with ``pre_dedup``) and its shard id by the routing rule probes
-    mirror."""
+    mirror. Every distributed build goes through here, so this is where a
+    ``shard_bits`` whose shard ids cannot be int partition ids fails."""
+    if not 0 <= shard_bits <= MAX_SHARD_BITS:
+        raise ValueError(
+            f"shard_bits={shard_bits} outside [0, {MAX_SHARD_BITS}]: each shard "
+            "builds in its own Spark partition, and partition ids are ints"
+        )
     keys = keys_df.select(F.col(key_name).alias("key"))
     if pre_dedup:
         keys = dedup_keys(keys)
@@ -202,7 +218,9 @@ def _build_shards(
     done: DataFrame | None = None,
 ) -> DataFrame:
     """The one shard build: ``_sharded_keys`` rows → one FOREST_SCHEMA row per
-    shard, through a single ``groupBy("shard").applyInPandas``.
+    shard, through a single ``groupBy("shard").applyInPandas`` over a
+    ``repartitionById`` Exchange: one reduce partition (and task) per shard,
+    which the grouping reuses and AQE does not coalesce.
 
     ``done`` (built shard ids) drops those shards' KEYS below the kernel:
     filtering the kernel's output instead would re-run every shard's
@@ -230,7 +248,9 @@ def _build_shards(
         sharded = sharded.join(F.broadcast(widths_df), "shard", "left").withColumn(
             "width", F.coalesce(F.col("width"), F.lit(8))
         )
-    return sharded.groupBy("shard").applyInPandas(_kernel_factory(spec), FOREST_SCHEMA)
+    sharded = sharded.withColumn("shard", F.col("shard").cast("int"))
+    return (sharded.repartitionById(1 << spec.shard_bits, "shard")
+            .groupBy("shard").applyInPandas(_kernel_factory(spec), FOREST_SCHEMA))
 
 
 def _call_args(fn, *args, **kwargs) -> dict:
@@ -261,16 +281,18 @@ def build_forest(
 ) -> DataFrame:
     """Build a filter forest over ``keys_df[key_name]`` (int64 carrier).
 
-    Returns a FOREST_SCHEMA DataFrame, one row per shard. Lazy — nothing runs
-    until the forest is written/collected.
+    Returns a FOREST_SCHEMA DataFrame, one row per shard, built when it is
+    written or collected.
 
-    shard_bits: None → planned from approx_count_distinct (single extra pass,
-    no shuffle). pre_dedup: run dropDuplicates before the shard shuffle —
-    worth it when the duplicate ratio is high (shrinks shuffle bytes), skipped
-    by default because the kernel dedups anyway and one shuffle beats two.
+    shard_bits: explicit (0-30) → nothing runs at call time. None → planned
+    at call time from ``approx_distinct_keys``: ONE Spark job over the keys
+    (no shuffle) runs before this returns. pre_dedup: run dropDuplicates
+    before the shard shuffle — worth it when the duplicate ratio is high
+    (shrinks shuffle bytes), skipped by default because the kernel dedups
+    anyway and one shuffle beats two.
     """
     if shard_bits is None:
-        n_est = keys_df.agg(F.approx_count_distinct(key_name).alias("n")).first()["n"]
+        n_est = approx_distinct_keys(keys_df, key_name)
         shard_bits = plan_shard_bits(n_est, target_keys_per_shard, min_shards)
     spec = ForestSpec(kind=kind, width=width, arity=arity, shard_bits=shard_bits,
                       route=route)
@@ -289,9 +311,9 @@ def build_forest_driver(
     contamination benchmark's gram hashes: the prescreen filter is
     broadcast and the confirm join broadcasts the gram strings
     themselves), the distributed ``build_forest`` → ``Forest.from_df``
-    chain is 3 Spark job rounds on tiny data (an approx_count_distinct
-    planning pass, the shuffle+kernel build, the state collect) — ~1.5 s
-    of pure scheduling per call. This builds the identical single-shard
+    chain is 3 Spark job rounds on tiny data (the planning job, the
+    shuffle+kernel build, the state collect) — ~1.5 s of pure scheduling
+    per call. This builds the identical single-shard
     filter (same deterministic kernel and seed schedule) in-process.
     """
     keys_u64 = to_u64(np.asarray(keys_i64, dtype=np.int64))
@@ -426,6 +448,19 @@ def write_forest(
     forest_df.write.mode(mode).parquet(path)
 
 
+def _append_unbuilt(
+    sharded: DataFrame, spec: ForestSpec, path: str, spark: SparkSession,
+    done: DataFrame | None, widths: dict[int, int] | None = None,
+) -> DataFrame:
+    """Append the shards missing from the sink at ``path`` (``done``: its
+    shard ids, None for a fresh sink) and return the sink. When no shard is
+    missing nothing is written: an empty append still adds a part file,
+    which changes the sink's fingerprint and every probe's plan token."""
+    if done is None or not _unbuilt(sharded, done).isEmpty():
+        write_forest(_build_shards(sharded, spec, widths, done), path)
+    return spark.read.parquet(path)
+
+
 def build_forest_resumable(
     keys_df: DataFrame,
     path: str,
@@ -441,11 +476,13 @@ def build_forest_resumable(
     stable across runs.
 
     The done-shard anti-join is applied to the KEYS, below the build kernel
-    (see ``_build_shards``).
+    (see ``_build_shards``); when no shard is missing, nothing is written.
     """
     if "shard_bits" not in build_kwargs:
         raise ValueError("resumable builds require explicit shard_bits")
     args = _call_args(build_forest, keys_df, **build_kwargs)
+    sharded = _sharded_keys(keys_df, args["key_name"], args["shard_bits"],
+                            args["route"], args["pre_dedup"])
     try:
         done = spark.read.parquet(path).select("shard").dropDuplicates()
     except AnalysisException as e:
@@ -461,10 +498,7 @@ def build_forest_resumable(
         if "PATH_NOT_FOUND" not in cond and "PATH_NOT_FOUND" not in str(e):
             raise
         done = None
-    sharded = _sharded_keys(keys_df, args["key_name"], args["shard_bits"],
-                            args["route"], args["pre_dedup"])
-    write_forest(_build_shards(sharded, _spec_from(args), done=done), path)
-    return spark.read.parquet(path)
+    return _append_unbuilt(sharded, _spec_from(args), path, spark, done)
 
 
 def build_forest_budgeted_resumable(
@@ -498,6 +532,8 @@ def build_forest_budgeted_resumable(
         )
     args = _call_args(build_forest_budgeted, keys_df, budget_bytes, shard_bits,
                       **build_kwargs)
+    sharded = _sharded_keys(keys_df, args["key_name"], shard_bits, args["route"],
+                            args["pre_dedup"])
     os.makedirs(path, exist_ok=True)
     plan_path = os.path.join(path, "_sparkfuse_widths.json")
     # the sink dir always exists here (it holds the plan file), so "fresh"
@@ -508,8 +544,6 @@ def build_forest_budgeted_resumable(
     )
     params = {"shard_bits": shard_bits, "budget_bytes": budget_bytes,
               "route": args["route"], "arity": args["arity"]}
-    sharded = _sharded_keys(keys_df, args["key_name"], shard_bits, args["route"],
-                            args["pre_dedup"])
     if os.path.exists(plan_path):
         with open(plan_path) as f:
             saved = json.load(f)
@@ -538,13 +572,8 @@ def build_forest_budgeted_resumable(
             json.dump(
                 params | {"widths": {str(s): w for s, w in widths.items()}}, f
             )
-    done = None
-    if has_data:
-        done = spark.read.parquet(path).select("shard").dropDuplicates()
-        if _unbuilt(sharded, done).isEmpty():
-            return spark.read.parquet(path)
-    write_forest(_build_shards(sharded, _spec_from(args), widths, done), path)
-    return spark.read.parquet(path)
+    done = spark.read.parquet(path).select("shard").dropDuplicates() if has_data else None
+    return _append_unbuilt(sharded, _spec_from(args), path, spark, done, widths)
 
 
 # ---------------------------------------------------------------------------

@@ -24,10 +24,11 @@ layer additionally runs dropDuplicates before keys reach a kernel) and both
 retry on peel failure with a deterministic reseed schedule bounded by
 MAX_ITERATIONS (/root/reference/xorfilter.go:102-104).
 
-These kernels run *per shard* inside ``groupBy('shard').applyInPandas``; the
-distributed parallelism is across shard filters (SURVEY.md §3.1), matching
-the reference's advice to build many filters side by side rather than one
-giant one.
+These kernels run *per shard* inside ``groupBy('shard').applyInPandas``, one
+shard per Spark task (``forest._build_shards`` places shards with
+``repartitionById``); the distributed parallelism is across shard filters
+(SURVEY.md §3.1), matching the reference's advice to build many filters side
+by side rather than one giant one.
 """
 
 from __future__ import annotations
@@ -198,9 +199,10 @@ class BuildWorkspace:
 
     A buffer is reallocated only when a request outgrows it, so retry
     attempts within one build AND successive shard builds inside the same
-    Spark python worker process (applyInPandas feeds a task's groups through
-    one process sequentially) run allocation-free after warm-up — this is
-    where many-tiny-shard forests spend their per-attempt fixed costs.
+    Spark python worker process (each shard is one task, and a reused worker
+    runs its tasks one after another) run allocation-free after warm-up —
+    this is where many-tiny-shard forests spend their per-attempt fixed
+    costs.
 
     Not thread-safe by design: a PySpark worker process executes one task at
     a time; driver-side concurrent builders should pass their own instance.

@@ -18,7 +18,7 @@ is why dedup-before-build is both correct and cheap at 10^12-turn scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -40,6 +40,21 @@ def with_key(df: DataFrame, *cols: str | Column, key_name: str = "key") -> DataF
 def dedup_keys(keys_df: DataFrame, key_name: str = "key") -> DataFrame:
     """Distinct keys via partial+final hash aggregate (skew-safe, one shuffle)."""
     return keys_df.select(key_name).dropDuplicates([key_name])
+
+
+def approx_distinct_keys(keys_df: DataFrame, key_name: str = "key") -> int:
+    """HLL++ ``approx_count_distinct(key_name)`` over ``keys_df`` in ONE Spark
+    job: the estimate is an ``Observation`` on a ``noop`` write of the key
+    column. ``agg(approx_count_distinct).first()`` reads the same estimate in
+    two AQE jobs (the partial-aggregate stage, then the final aggregate);
+    HLL registers merge by register-max in any order, so the observed
+    accumulator merge returns the identical value (0 for an empty frame).
+    A failing input raises from the write, before the metric is read."""
+    obs = Observation()
+    (keys_df.select(key_name)
+     .observe(obs, F.approx_count_distinct(key_name).alias("n"))
+     .write.format("noop").mode("overwrite").save())
+    return obs.get["n"]
 
 
 def dedup_keys_salted(

@@ -15,10 +15,12 @@ deduped keys of many epochs, rebuild one filter, atomically replace (the
 determinism of builds makes replacement verifiable by content hash). Run
 ``compact_forest`` on a cadence that bounds epoch count.
 
-Plan shape per micro-batch (foreachBatch):
+Plan shape per micro-batch (foreachBatch; ``shard_bits`` is explicit, so no
+planning job runs):
 
-    micro-batch df → xxhash64 keys (codegen) → groupBy(shard)
-    → applyInPandas(build kernel) → append to forest parquet sink
+    micro-batch df → xxhash64 keys, shard (codegen) →
+    repartitionById(2^shard_bits, shard) → groupBy(shard).applyInPandas(build
+    kernel) → append to forest parquet sink
 
 foreachBatch (not a custom streaming sink) is the idiomatic choice: the
 build is a batch aggregation per epoch, and the parquet append is atomic per

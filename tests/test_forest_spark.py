@@ -967,6 +967,137 @@ def test_resume_equals_fresh(spark, tmp_path):
     assert resumed == fresh  # byte-identical via deterministic rebuilds
 
 
+def _assert_rows_equal_driver(rows, keys_df, spec, widths=None):
+    """Every Spark-built forest row equals the driver's ``_forest_row`` over
+    the same shard's keys (routed by the numpy mirror of the JVM xxhash64
+    top-bits rule, at ``widths[shard]`` when a width plan is given), field
+    for field, build_seconds excepted."""
+    from dataclasses import replace
+
+    from sparkfuse.forest import _forest_row
+    from sparkfuse.hashing import to_u64, xxh64_u64
+
+    keys = to_u64(np.array([r["key"] for r in keys_df.collect()], dtype=np.int64))
+    shards = np.zeros(len(keys), dtype=np.int64)
+    if spec.shard_bits:
+        shards = (xxh64_u64(keys) >> np.uint64(64 - spec.shard_bits)).astype(np.int64)
+    got = {r["shard"]: dict(r.asDict(), payload=bytes(r["payload"])) for r in rows}
+    assert sorted(got) == np.unique(shards).tolist()
+    for shard, row in got.items():
+        width = (widths or {}).get(shard, spec.width)
+        want = _forest_row(shard, keys[shards == shard], replace(spec, width=width))
+        row.pop("build_seconds")
+        want.pop("build_seconds")
+        assert row == want, shard
+
+
+@pytest.mark.parametrize(
+    "kind,width,arity,shard_bits",
+    [("fuse", 8, 3, 0), ("fuse", 8, 3, 3), ("fuse", 16, 3, 1), ("xor", 8, 3, 2),
+     ("fuse", 8, 4, 2)],
+)
+def test_spark_rows_equal_driver_forest_rows(spark, kind, width, arity, shard_bits):
+    from sparkfuse.forest import ForestSpec
+
+    keys = _keys_df(spark, 20_000, seed=shard_bits)
+    rows = build_forest(keys, kind=kind, width=width, arity=arity,
+                        shard_bits=shard_bits).collect()
+    spec = ForestSpec(kind=kind, width=width, arity=arity, shard_bits=shard_bits)
+    _assert_rows_equal_driver(rows, keys, spec)
+
+
+def test_budgeted_and_resumed_rows_equal_driver_forest_rows(spark, tmp_path):
+    from sparkfuse.forest import ForestSpec, build_forest_budgeted
+
+    keys = _keys_df(spark, 20_000, seed=7)
+    widths = {0: 16, 1: 8, 2: 32, 3: 8}
+    budgeted = build_forest_budgeted(keys, 1 << 30, shard_bits=2, widths=widths)
+    _assert_rows_equal_driver(budgeted.collect(), keys, ForestSpec(shard_bits=2), widths)
+
+    path = str(tmp_path / "forest")
+    write_forest(build_forest(keys, shard_bits=2).filter(F.col("shard") < 2), path)
+    resumed = build_forest_resumable(keys, path, spark, shard_bits=2).collect()
+    _assert_rows_equal_driver(resumed, keys, ForestSpec(shard_bits=2))
+
+
+def test_resumable_complete_sink_writes_nothing(spark, tmp_path):
+    """A resume with every shard built appends no (empty) part file, so the
+    sink's listing and its probe fingerprint stay as they were."""
+    import os
+
+    from sparkfuse.probe import _sink_fingerprint
+
+    keys = _keys_df(spark, 10_000)
+    path = str(tmp_path / "forest")
+    build_forest_resumable(keys, path, spark, shard_bits=1)
+    before = (sorted(os.listdir(path)), _sink_fingerprint(path)[2])
+    again = build_forest_resumable(keys, path, spark, shard_bits=1)
+    assert (sorted(os.listdir(path)), _sink_fingerprint(path)[2]) == before
+    assert again.count() == 2
+
+
+@pytest.mark.parametrize("shard_bits", [-1, 31])
+def test_shard_bits_outside_int_partition_ids_fail_by_name(spark, shard_bits):
+    from sparkfuse.forest import build_forest_budgeted
+
+    keys = _keys_df(spark, 100)
+    with pytest.raises(ValueError, match=f"shard_bits={shard_bits} outside"):
+        build_forest(keys, shard_bits=shard_bits)
+    with pytest.raises(ValueError, match=f"shard_bits={shard_bits} outside"):
+        build_forest_budgeted(keys, 1 << 20, shard_bits=shard_bits)
+
+
+@pytest.mark.parametrize("frame", ["200k", "empty", "filtered_out", "zero_partitions"])
+def test_observed_estimate_equals_aggregate(spark, frame):
+    """The one-job observed HLL++ estimate is the two-job aggregate's value."""
+    from sparkfuse.keys import approx_distinct_keys
+
+    big = _keys_df(spark, 200_000)
+    df = {
+        "200k": big,
+        "empty": big.limit(0),
+        "filtered_out": big.filter(F.col("key") != F.col("key")),
+        "zero_partitions": spark.createDataFrame(spark.sparkContext.emptyRDD(), "key long"),
+    }[frame]
+    want = df.agg(F.approx_count_distinct("key").alias("n")).first()["n"]
+    assert approx_distinct_keys(df) == want
+    if frame == "200k":
+        assert abs(want - 200_000) < 0.1 * 200_000
+
+
+def test_planned_build_runs_one_job_at_call_time(spark):
+    keys = _keys_df(spark, 50_000)
+    _, jobs = _jobs_started(spark, lambda: build_forest(keys, min_shards=4))
+    assert jobs == 1  # the observed estimate; the build itself stays lazy
+    _, jobs = _jobs_started(spark, lambda: build_forest(keys, shard_bits=2))
+    assert jobs == 0
+
+
+def test_planning_on_failing_input_raises(spark):
+    """A key column that fails to evaluate raises from the planning write
+    instead of leaving the driver waiting on a metric that never comes."""
+    import threading
+
+    from sparkfuse.bloom import build_bloom
+
+    bad = spark.range(100).select(F.raise_error(F.lit("bad key")).cast("long").alias("key"))
+    outcome = {}
+
+    def plan():
+        for name, build in (("forest", build_forest), ("bloom", build_bloom)):
+            try:
+                build(bad)
+            except Exception as e:  # noqa: BLE001 - the error is the outcome
+                outcome[name] = str(e)
+
+    worker = threading.Thread(target=plan, daemon=True)
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive(), "planning hung on a failing input"
+    assert set(outcome) == {"forest", "bloom"}
+    assert all("bad key" in msg for msg in outcome.values()), outcome
+
+
 def test_forest_merge_is_union(spark):
     # the mergeable-aggregation property: a forest over disjoint shard ranges
     # merges by row union — probing the union behaves like one build

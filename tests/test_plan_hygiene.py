@@ -45,6 +45,28 @@ def test_forest_build_prunes_to_key_columns(spark):
         assert other not in rs, rs
 
 
+def test_forest_build_one_exchange_one_partition_per_shard(spark):
+    """The shard build plans ONE shuffle Exchange, which the grouping reuses,
+    and every shard lands in its own reduce partition: AQE coalescing (on in
+    this Spark session) must not fold the shards into one task, where their
+    kernels would run one after another."""
+    import re
+
+    from sparkfuse.forest import build_forest
+    from sparkfuse.keys import extract_keys
+
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    build = build_forest(
+        extract_keys(lineitem, "l_orderkey", "l_linenumber"), shard_bits=2
+    )
+    plan = _explain(build)
+    assert len(re.findall(r"^\(\d+\) Exchange$", plan, re.M)) == 1, plan
+    rows = build.select("shard", F.spark_partition_id().alias("pid")).collect()
+    assert sorted(r["shard"] for r in rows) == [0, 1, 2, 3]
+    assert all(r["pid"] == r["shard"] for r in rows), rows
+
+
 def test_membership_prescreen_pushes_dimension_filter_to_scan(spark):
     """In the xor8_members shape, the mktsegment predicate reaches the
     customer scan as a pushed filter, and the orders scan reads only the
