@@ -586,14 +586,31 @@ _REPLAY_FIELDS = ("kind", "width", "arity", "payload", "content_sha256")
 _LAYOUT_FIELDS = ("kind", "arity", "shard_bits", "route")
 
 
-def _uniform_layout(rows) -> dict:
+def _uniform_layout(rows, shards=()) -> dict:
     """The forest's one {kind, arity, shard_bits, route}, or a ValueError
-    when its rows disagree. Width MAY vary per shard (budgeted mixed-width
-    forests)."""
+    when its rows disagree or a shard id in ``shards`` lies outside
+    [0, 2^shard_bits). Width MAY vary per shard (budgeted mixed-width
+    forests).
+
+    An out-of-range shard id is the epoch tag of an epoch-appended sink
+    (shard = epoch·2^shard_bits + shard): read as one forest, every epoch
+    past the first would be probed against the wrong filter or none —
+    silent false negatives."""
     layouts = {tuple(r[f] for f in _LAYOUT_FIELDS) for r in rows}
     if len(layouts) != 1:
         raise ValueError(f"inhomogeneous forest: {sorted(layouts)}")
-    return dict(zip(_LAYOUT_FIELDS, layouts.pop()))
+    layout = dict(zip(_LAYOUT_FIELDS, layouts.pop()))
+    space = 1 << max(layout["shard_bits"], 0)
+    for shard in shards:
+        if not 0 <= shard < space:
+            raise ValueError(
+                f"shard {shard} is outside the {space} shards of a "
+                f"shard_bits={layout['shard_bits']} forest: this is an "
+                "epoch-appended sink (shard = epoch * 2^shard_bits + shard). "
+                "Probe it with approx_contains_epoch_sink, or compact it "
+                "(compact_forest) into one forest first."
+            )
+    return layout
 
 
 def _check_payload_sha(rows, source: str | None = None) -> None:
@@ -661,7 +678,9 @@ class Forest:
         rows = [r for r, _ in decoded.values()]
         self.filters = {s: filt for s, (_, filt) in decoded.items()}
         self.widths = {s: int(r["width"]) for s, (r, _) in decoded.items()}
-        self.kind, self.arity, self.shard_bits, self.route = _uniform_layout(rows).values()
+        self.kind, self.arity, self.shard_bits, self.route = _uniform_layout(
+            rows, decoded
+        ).values()
         self.width = max(self.widths.values())  # widest member (informational)
         self.nkeys = sum(r["nkeys"] for r in rows)
         self.size_in_bytes = sum(len(r["payload"]) for r in rows)

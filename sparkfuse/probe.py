@@ -2,8 +2,13 @@
 
 The reference filter is immutable — build once, use many times — so a probe
 does one thing: load a filter and gather against it. This module holds the
-places that probe can run, over ONE loader, ONE decoder and ONE UDF:
+places that probe can run, over one of each shared piece:
 
+* **One sink handle.** ``_sink(path)`` lists a sink once per plan and
+  returns (path, listing or None, plan token); the token comes from the
+  listing's content (``_sink_plan_token``), or is random per plan when the
+  driver cannot list the sink yet. Every sink form — hybrid, epoch,
+  routed-sink, the planner's — takes its listing and token from it.
 * **One sink loader.** ``_load_cached_from_sink`` reads a parquet forest
   sink with pyarrow — the whole sink, or one shard by parquet pushdown on
   ``shard`` — checks each payload against its ``content_sha256`` (a
@@ -16,9 +21,17 @@ places that probe can run, over ONE loader, ONE decoder and ONE UDF:
   into filters for ``Forest``, the routed cogroup kernel and the per-shard
   sink load alike: replayed rows decode once, a shard with two different
   payloads fails loudly.
-* **One probe UDF.** ``_probe_udf`` builds every scalar probe column (the
-  broadcast ``probe``, the hybrid ``probe_sink``, the epoch ``probe_epochs``
-  and the routed-sink ``probe_shards``) and pins it where it was written.
+* **One probe UDF, one probe column.** ``_probe_udf`` builds every scalar
+  probe UDF (the broadcast ``probe``, the hybrid ``probe_sink``, the epoch
+  ``probe_epochs`` and the routed-sink ``probe_shards``) and pins it where
+  it was written. ``_probe_column`` is the one way the key-only forms add
+  their verdict column: it refuses an output column the frame already
+  has, as the routed forms do, so every placement fails the same way.
+* **One exact plan.** ``_exact_member`` is every exact-membership plan:
+  prescreen, keep the survivors, semi-join them against ``_build_keys``.
+  Keyed (the routed regimes) it dedups the probe keys first, so only
+  8-byte keys cross the shard shuffle. Its helper column is the reserved
+  ``_sf_maybe``, so a user column is never dropped or overwritten.
 
 The placements:
 
@@ -52,6 +65,10 @@ The placements:
   threshold, so a broadcast-sized forest is planned and loaded with no
   Spark job. Only bigger forests, unlistable sinks and sink-less calls pay
   the Spark payload-size aggregate.
+
+Every non-epoch placement refuses an epoch-appended sink by name (its
+shard ids run past ``2^shard_bits`` — ``forest._uniform_layout``);
+probe those with ``approx_contains_epoch_sink``.
 """
 
 from __future__ import annotations
@@ -98,23 +115,36 @@ def _probe_udf(name: str, probe):
     return F.pandas_udf(udf, BooleanType()).asNondeterministic()
 
 
-def approx_contains_udf(forest: Forest, spark=None):
-    """Vectorized membership UDF over the broadcast forest.
+def _probe_column(df: DataFrame, key: str | Column, out: str, name: str, load) -> DataFrame:
+    """``df`` plus the verdict column ``out``: the ``_probe_udf`` named
+    ``name`` over ``key``, probing ``load()`` — the probe handle (a Forest
+    or EpochForest) as the worker gets it. An ``out`` that ``df`` already
+    has is refused, as every placement refuses it."""
+    _verdict_schema(df, out)
+    col = F.col(key) if isinstance(key, str) else key
+    return df.withColumn(out, _probe_udf(name, lambda keys: load().contains_np(keys))(col))
 
-    Uses an explicit SparkContext broadcast so a multi-MB forest ships once
-    per executor, not once per task closure.
-    """
+
+def _forest_loader(forest: Forest, spark):
+    """``() -> forest`` on the worker. With a session the forest goes out as
+    an explicit SparkContext broadcast, so a multi-MB forest ships once per
+    executor, not once per task closure."""
     if spark is None:
-        return _probe_udf("probe", forest.contains_np)
+        return lambda: forest
     bc = spark.sparkContext.broadcast(forest)
-    return _probe_udf("probe", lambda keys: bc.value.contains_np(keys))
+    return lambda: bc.value
+
+
+def approx_contains_udf(forest: Forest, spark=None):
+    """Vectorized membership UDF over the broadcast forest."""
+    load = _forest_loader(forest, spark)
+    return _probe_udf("probe", lambda keys: load().contains_np(keys))
 
 
 def approx_contains(
     df: DataFrame, key: str | Column, forest: Forest, spark=None, out: str = "maybe_member"
 ) -> DataFrame:
-    col = F.col(key) if isinstance(key, str) else key
-    return df.withColumn(out, approx_contains_udf(forest, spark)(col))
+    return _probe_column(df, key, out, "probe", _forest_loader(forest, spark))
 
 
 def approx_contains_arrow(
@@ -147,12 +177,12 @@ def approx_contains_arrow(
     import pyarrow as pa
 
     out_schema = _verdict_schema(df, out)
-    bc = spark.sparkContext.broadcast(forest)
+    load = _forest_loader(forest, spark)
     names = list(df.columns) + [out]
     key_idx = df.columns.index(key)
 
     def probe_batches(batches):
-        f = bc.value
+        f = load()
         for batch in batches:
             arr = batch.column(key_idx).to_numpy(zero_copy_only=False)
             verdict = f.contains_np(arr)
@@ -243,30 +273,25 @@ def _sink_plan_token(content_key) -> str:
     return hashlib.sha256(repr(content_key).encode()).hexdigest()[:16]
 
 
-def _sink_listing_or_none(sink_path: str):
-    """``_sink_fingerprint(sink_path)`` when the sink is listable from the
-    driver at plan time, else None. None keeps lazy composition legal —
-    building the probe DataFrame BEFORE the sink is written, or on a driver
-    without read access to an executor-only URI; executors still fail
-    loudly at execution time if the sink never appears."""
+def _sink(path: str, required: bool = False):
+    """The one sink handle: (path, listing, plan token), taken once per plan
+    on the driver. The token is fixed at plan time and ships in the probe's
+    closure; derived from the listing, it lets repeat queries over an
+    unchanged sink skip the per-worker LIST and reuse the worker caches.
+
+    A sink the driver cannot list gives (path, None, a random per-plan
+    token), at the old cost of one LIST per worker per query. That keeps
+    lazy composition legal — building the probe DataFrame BEFORE the sink
+    is written, or on a driver without read access to an executor-only URI;
+    executors still fail loudly if the sink never appears. ``required``
+    raises the listing error instead."""
     try:
-        return _sink_fingerprint(sink_path)
+        listing = _sink_fingerprint(path)
     except Exception:
-        return None
-
-
-def _plan_token_for(listing) -> str:
-    """Content-derived plan token for a driver-side listing; a random
-    per-plan token when there is none, at the old cost (one LIST per worker
-    per query)."""
-    if listing is None:
-        return os.urandom(8).hex()
-    return _sink_plan_token(listing[2])
-
-
-def _plan_token_or_fallback(sink_path: str) -> str:
-    """Plan token for a probe planned apart from ``probe_forest``."""
-    return _plan_token_for(_sink_listing_or_none(sink_path))
+        if required:
+            raise
+        return path, None, os.urandom(8).hex()
+    return path, listing, _sink_plan_token(listing[2])
 
 
 def _read_sink(
@@ -359,12 +384,6 @@ def _load_cached_from_sink(
     return handle
 
 
-def _load_forest_from_sink(path: str, plan_token: str) -> Forest:
-    """Worker-side Forest load from a parquet sink (see
-    ``_load_cached_from_sink`` for the cache contract)."""
-    return _load_cached_from_sink(path, plan_token, (), Forest)
-
-
 def approx_contains_sink(
     df: DataFrame, key: str | Column, sink_path: str, out: str = "maybe_member"
 ) -> DataFrame:
@@ -380,40 +399,17 @@ def approx_contains_sink(
     across queries the file-listing fingerprint (names+sizes+mtimes)
     guarantees a fresh load after any append or rewrite.
     """
-    # content-derived plan token, fixed at plan time (ships in closure): one
-    # driver-side LIST per plan, and repeat queries over an unchanged sink
-    # skip the per-worker LIST + reuse the worker forest cache directly;
-    # falls back to a random token when the sink is not yet listable
-    return _approx_contains_sink(
-        df, key, sink_path, _plan_token_or_fallback(sink_path), out
-    )
+    return _hybrid_probe(df, key, _sink(sink_path), out)
 
 
-def _approx_contains_sink(
-    df: DataFrame, key: str | Column, sink_path: str, plan_token: str, out: str
-) -> DataFrame:
-    """``approx_contains_sink`` under a plan token the caller derived (the
-    planner reuses the listing it already took)."""
-    col = F.col(key) if isinstance(key, str) else key
-    probe = _probe_udf(
-        "probe_sink",
-        lambda keys: _load_forest_from_sink(sink_path, plan_token).contains_np(keys),
-    )
-    return df.withColumn(out, probe(col))
-
-
-def _load_epoch_forest_from_sink(path: str, plan_token: str, shard_bits: int):
-    """Worker-side EpochForest load from an epoch-appended streaming sink —
-    same cache scheme as ``_load_forest_from_sink``. ``shard_bits`` joins
-    the cache key because it changes the (epoch, shard) decomposition; a
-    value that differs from the sink rows' recorded build value fails
-    loudly inside ``EpochForest.__init__`` (silent mis-routing would
-    produce false negatives)."""
-    from sparkfuse.streaming import EpochForest
-
-    return _load_cached_from_sink(
-        path, plan_token, ("epoch", shard_bits),
-        lambda rows: EpochForest(rows, shard_bits),
+def _hybrid_probe(df: DataFrame, key: str | Column, sink, out: str) -> DataFrame:
+    """``approx_contains_sink`` over a sink handle: each worker loads the
+    whole forest through the sink loader (see ``_load_cached_from_sink`` for
+    the cache contract)."""
+    path, _, token = sink
+    return _probe_column(
+        df, key, out, "probe_sink",
+        lambda: _load_cached_from_sink(path, token, (), Forest),
     )
 
 
@@ -452,16 +448,19 @@ def approx_contains_epoch_sink(
     it raises with the remediation (``compact_forest``) instead of letting
     every executor OOM mid-query.
     """
-    col = F.col(key) if isinstance(key, str) else key
+    from sparkfuse.streaming import EpochForest
+
+    # NOTE: compared against ON-DISK sink bytes here (cheap to list at plan
+    # time); the probe_forest planner compares the same knob to in-memory
+    # payload bytes — both proxies for worker residency
     budget = replication_budget
     if budget is None:
-        # NOTE: compared against ON-DISK sink bytes here (cheap to list at
-        # plan time); the probe_forest planner compares the same knob to
-        # in-memory payload bytes — both proxies for worker residency
         budget = _replication_budget(df.sparkSession)
+    # with the budget disabled the sink may legitimately not be listable
+    # from the driver yet: the handle falls back rather than fail
+    path, listing, token = _sink(sink_path, required=budget >= 0)
     if budget >= 0:
-        _, _, content_key = _sink_fingerprint(sink_path)
-        sink_bytes = sum(size for _, size, _ in content_key[1])
+        sink_bytes = sum(size for _, size, _ in listing[2][1])
         if sink_bytes > budget:
             raise ValueError(
                 f"epoch sink {sink_path!r} is {sink_bytes} bytes, past the "
@@ -471,21 +470,17 @@ def approx_contains_epoch_sink(
                 "sparkfuse.probe.replicationBudget / pass replication_budget "
                 "(-1 disables)."
             )
-        # content-derived plan token (reuses the budget check's listing):
-        # repeat queries over an unchanged sink reuse the worker memos; a
-        # new epoch changes the fingerprint and forces the reload
-        plan_token = _sink_plan_token(content_key)
-    else:
-        # budget disabled: the sink may legitimately not be listable from
-        # the driver yet — fall back rather than fail at plan time
-        plan_token = _plan_token_or_fallback(sink_path)
-    probe = _probe_udf(
-        "probe_epochs",
-        lambda keys: _load_epoch_forest_from_sink(
-            sink_path, plan_token, shard_bits
-        ).contains_np(keys),
+    # shard_bits joins the cache key: it changes the (epoch, shard)
+    # decomposition, and a value that differs from the rows' recorded build
+    # value fails loudly inside EpochForest (mis-routing would produce
+    # false negatives)
+    return _probe_column(
+        df, key, out, "probe_epochs",
+        lambda: _load_cached_from_sink(
+            path, token, ("epoch", shard_bits),
+            lambda rows: EpochForest(rows, shard_bits),
+        ),
     )
-    return df.withColumn(out, probe(col))
 
 
 def exact_member_semi_join(
@@ -503,9 +498,11 @@ def exact_member_semi_join(
     semi join, so a plain SQL ``IN`` subquery is a valid oracle). The join
     side only ever sees prescreen survivors — that is the shuffle saving.
     """
-    pre = probe_df.filter(approx_contains_udf(forest, spark)(F.col(probe_key)))
-    build_keys = build_df.select(F.col(build_key).alias(probe_key)).dropDuplicates()
-    return pre.join(build_keys, on=probe_key, how="left_semi")
+    return _exact_member(
+        probe_df, probe_key, build_df, build_key,
+        lambda df, key, out: approx_contains(df, key, forest, spark, out),
+        keyed=False,
+    )
 
 
 def exact_anti_join(
@@ -519,23 +516,57 @@ def exact_anti_join(
     """Exact non-membership: filter-negative rows are definitely absent
     (zero false negatives ⇒ filter-negative cannot be a member); only the
     maybe-positive sliver needs the anti-join shuffle."""
-    probe_col = F.col(probe_key)
-    flagged = probe_df.withColumn("_maybe", approx_contains_udf(forest, spark)(probe_col))
-    definite = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    maybes = flagged.filter(F.col("_maybe")).drop("_maybe")
-    build_keys = build_df.select(F.col(build_key).alias(probe_key)).dropDuplicates()
-    confirmed_absent = maybes.join(build_keys, on=probe_key, how="left_anti")
+    flagged = approx_contains(probe_df, probe_key, forest, spark, out="_sf_maybe")
+    definite = flagged.filter(~F.col("_sf_maybe")).drop("_sf_maybe")
+    confirmed_absent = flagged.filter("_sf_maybe").drop("_sf_maybe").join(
+        _build_keys(build_df, build_key, probe_key), on=probe_key, how="left_anti"
+    )
     return definite.unionByName(confirmed_absent)
 
 
+def _build_keys(build_df: DataFrame, build_key: str, name: str) -> DataFrame:
+    """The distinct build keys as column ``name``: the exact side of every
+    confirm and audit."""
+    return build_df.select(F.col(build_key).alias(name)).dropDuplicates()
+
+
+def _exact_member(probe_df: DataFrame, probe_key: str, build_df: DataFrame, build_key: str,
+                  prescreen, keyed: bool) -> DataFrame:
+    """The one exact-membership plan: ``prescreen(df, key, out)`` adds a
+    zero-FN verdict column, its survivors are exact-confirmed by a left-semi
+    join against the build keys. The result is exact, so a plain SQL ``IN``
+    subquery is a valid oracle.
+
+    Unkeyed, the probe rows are screened in place (the broadcast and hybrid
+    prescreens need no shuffle). Keyed, only the deduplicated probe KEY
+    column is screened and confirmed — the routed prescreens shuffle by
+    shard, and only 8-byte keys should cross that shuffle — and the
+    original rows are then semi-joined against the confirmed keys, a set of
+    ~(members + fpp·non-members) that AQE typically broadcasts. The helper
+    column is the reserved ``_sf_maybe``: a probe frame that has one is
+    refused, and every other column is kept."""
+    _verdict_schema(probe_df, "_sf_maybe")  # reserved in the keyed plan too
+    screened = probe_df.select(probe_key).dropDuplicates() if keyed else probe_df
+    maybe = prescreen(screened, probe_key, "_sf_maybe")
+    members = maybe.filter(F.col("_sf_maybe")).drop("_sf_maybe").join(
+        _build_keys(build_df, build_key, probe_key), on=probe_key, how="left_semi"
+    )
+    return probe_df.join(members, on=probe_key, how="left_semi") if keyed else members
+
+
 def _forest_meta(forest_df: DataFrame) -> dict:
-    """Read the forest's (tiny) layout metadata — NOT the payloads.
+    """Read the forest's (tiny) layout metadata — NOT the payloads: one row
+    per distinct layout, with its lowest and highest shard id.
 
     kind/arity/shard_bits/route must be unique (they define the routing and
-    probe math); width MAY vary per shard (budgeted mixed-width forests) and
-    travels per-row through the cogroup instead.
+    probe math) and every shard id in range; width MAY vary per shard
+    (budgeted mixed-width forests) and travels per-row through the cogroup
+    instead.
     """
-    return _uniform_layout(forest_df.select(*_LAYOUT_FIELDS).dropDuplicates().collect())
+    rows = forest_df.groupBy(*_LAYOUT_FIELDS).agg(
+        F.min("shard").alias("lo"), F.max("shard").alias("hi")
+    ).collect()
+    return _uniform_layout(rows, [s for r in rows for s in (r["lo"], r["hi"])])
 
 
 def approx_contains_routed(
@@ -598,43 +629,36 @@ def approx_contains_routed(
         )
 
     tagged = probe_df.withColumn("_sf_shard", shard_column(key, shard_bits, route))
-    forest_keyed = forest_df.select(
-        F.col("shard").alias("_sf_shard"), "shard", "kind", "width", "arity",
-        "payload", "content_sha256",
-    )
-    return (
-        tagged.groupBy("_sf_shard")
-        .cogroup(forest_keyed.groupBy("_sf_shard"))
-        .applyInArrow(probe_shard, out_schema)
-    )
+    forest_keyed = forest_df.select(F.col("shard").alias("_sf_shard"), "shard", "kind",
+                                    "width", "arity", "payload", "content_sha256")
+    return tagged.groupBy("_sf_shard").cogroup(
+        forest_keyed.groupBy("_sf_shard")
+    ).applyInArrow(probe_shard, out_schema)
 
 
-def _sink_forest_meta(sink_path: str, listing=None) -> tuple[dict, str]:
-    """Driver-side (layout metadata, plan token) for a forest sink, read
-    straight from the parquet files via pyarrow — NO Spark job. The previous
-    shape (``_forest_meta(spark.read.parquet(sink))`` = a scan + distinct +
-    collect job per plan construction) was a measurable slice of the
-    fresh-plan routed-sink gap vs the cogroup path (PLANS.md §17 round-5
-    re-measurement). Column-pruned: only the four tiny layout columns are
-    read, never payloads.
+def _sink_forest_meta(sink_path: str, listing=None) -> tuple[dict, tuple]:
+    """Driver-side (layout metadata, (lowest, highest) shard id) for a
+    forest sink, read straight from the parquet files via pyarrow — NO
+    Spark job (``_forest_meta(spark.read.parquet(sink))`` is a scan +
+    aggregate + collect job per plan construction). Column-pruned: only the
+    tiny layout and shard columns are read, never payloads. Cached per sink
+    content; ``listing`` is a ``_sink_fingerprint`` the caller already took.
 
-    The plan token is derived from the sink's content fingerprint
-    (names+sizes+mtimes) instead of ``os.urandom``: queries over an
-    UNCHANGED sink now share the per-worker listing memo and shard-filter
-    memo across plans (no per-query LIST on every worker), while any append
-    or rewrite changes the fingerprint and therefore the token — same
-    freshness contract, strictly fewer repeated reads. ``listing`` is a
-    ``_sink_fingerprint`` the caller already took."""
+    The shard range is not checked here — an epoch-appended sink has a
+    uniform layout too; a plain-forest reader passes it to
+    ``_uniform_layout``."""
     import pyarrow.dataset as pads
 
     filesystem, data_files, content_key = listing or _sink_fingerprint(sink_path)
     meta = _SINK_META_CACHE.get(content_key)
     if meta is None:
-        meta = _uniform_layout(pads.dataset(
-            data_files, filesystem=filesystem, format="parquet"
-        ).to_table(columns=list(_LAYOUT_FIELDS)).to_pylist())
+        rows = pads.dataset(data_files, filesystem=filesystem, format="parquet").to_table(
+            columns=[*_LAYOUT_FIELDS, "shard"]
+        ).to_pylist()
+        shards = [r["shard"] for r in rows]
+        meta = (_uniform_layout(rows), (min(shards), max(shards)))
         _cache_put(_SINK_META_CACHE, _SINK_CACHE_MAX, {content_key: meta})
-    return meta, _sink_plan_token(content_key)
+    return meta
 
 
 def _load_shard_filter_from_sink(path: str, plan_token: str, shard: int):
@@ -723,30 +747,26 @@ def approx_contains_routed_sink(
     parity claim was exactly this, because bench.py runs the cogroup row
     first. PLANS.md §17 (round-5 re-measurement) has the numbers.
     """
-    return _approx_contains_routed_sink(probe_df, key, sink_path, spark, out, None)
+    return _routed_sink_probe(probe_df, key, _sink(sink_path, required=True), spark, out)
 
 
-def _approx_contains_routed_sink(
-    probe_df: DataFrame,
-    key: str,
-    sink_path: str,
-    spark: SparkSession,
-    out: str,
-    listing,
-) -> DataFrame:
-    """``approx_contains_routed_sink`` over a sink listing the caller may
-    already hold (None: list it here)."""
-    # driver-side pyarrow meta read + content-derived plan token: no Spark
-    # job at plan time, and repeat queries over an unchanged sink reuse the
-    # workers' listing/filter memos (PLANS.md §17 round-5 re-measurement)
-    meta, plan_token = _sink_forest_meta(sink_path, listing)
-    shard_bits, route = meta["shard_bits"], meta["route"]
+def _routed_sink_probe(probe_df: DataFrame, key: str, sink, spark: SparkSession, out: str):
+    """``approx_contains_routed_sink`` over a sink handle. A handle without
+    a listing (the sink was not listable when the planner took it) is
+    listed again by the meta read, which fails if the sink is still
+    absent."""
+    path, listing, token = sink
+    # driver-side pyarrow meta read: no Spark job at plan time (PLANS.md §17
+    # round-5 re-measurement)
+    layout, shards = _sink_forest_meta(path, listing)
+    _uniform_layout([layout], shards)  # refuses an epoch-appended sink by name
+    shard_bits, route = layout["shard_bits"], layout["route"]
     _verdict_schema(probe_df, out, ("_sf_shard", "_sf_tag"))
 
     def probe_shards(keys, shards):
         verdict = np.zeros(len(keys), dtype=bool)
         for s in np.unique(shards):
-            filt = _load_shard_filter_from_sink(sink_path, plan_token, int(s))
+            filt = _load_shard_filter_from_sink(path, token, int(s))
             if filt is not None:
                 mask = shards == s
                 verdict[mask] = filt.contains(to_u64(keys[mask]))
@@ -784,27 +804,6 @@ def _tag_route(tagged: DataFrame, spark: SparkSession, shard_bits: int) -> DataF
     ).repartition(parts, "_sf_tag")
 
 
-def _exact_member_keyed(
-    probe_df: DataFrame,
-    probe_key: str,
-    build_df: DataFrame,
-    build_key: str,
-    prescreen,
-) -> DataFrame:
-    """Shared shape of the keyed exact-membership plans: dedup the probe KEY
-    column (only 8-byte keys cross the prescreen shuffle), prescreen it with
-    ``prescreen(keys_only) -> flagged-with-_maybe``, exact-confirm survivors
-    against the build keys, then semi-join the original probe rows. The
-    survivor set is ~(members + fpp·non-members), which AQE typically
-    broadcasts for the final semi-join. Result is exact (zero-FN prescreen +
-    exact confirm), so a plain SQL ``IN`` subquery is a valid oracle."""
-    keys_only = probe_df.select(probe_key).dropDuplicates()
-    maybe = prescreen(keys_only).filter(F.col("_maybe")).drop("_maybe")
-    build_keys = build_df.select(F.col(build_key).alias(probe_key)).dropDuplicates()
-    members = maybe.join(build_keys, on=probe_key, how="left_semi")
-    return probe_df.join(members, on=probe_key, how="left_semi")
-
-
 def exact_member_routed(
     probe_df: DataFrame,
     probe_key: str,
@@ -813,11 +812,12 @@ def exact_member_routed(
     forest_df: DataFrame,
 ) -> DataFrame:
     """Exact membership for un-broadcastable forests: routed-cogroup
-    prescreen through ``_exact_member_keyed`` — same contract as
+    prescreen through the keyed ``_exact_member`` plan — same contract as
     ``exact_member_semi_join``."""
-    return _exact_member_keyed(
+    return _exact_member(
         probe_df, probe_key, build_df, build_key,
-        lambda keys: approx_contains_routed(keys, probe_key, forest_df, out="_maybe"),
+        lambda df, key, out: approx_contains_routed(df, key, forest_df, out),
+        keyed=True,
     )
 
 
@@ -853,12 +853,13 @@ def _replication_budget(spark) -> int:
     (default 512m) — the single source of truth for both consumers: the
     probe_forest planner (compares in-memory payload bytes) and the
     epoch-sink guard (compares on-disk sink bytes)."""
-    raw = DEFAULT_REPLICATION_BUDGET
-    if spark is not None:
-        raw = spark.conf.get(
-            "sparkfuse.probe.replicationBudget", DEFAULT_REPLICATION_BUDGET
-        )
-    return _parse_byte_string(raw)
+    return _conf_bytes(spark, "sparkfuse.probe.replicationBudget", DEFAULT_REPLICATION_BUDGET)
+
+
+def _conf_bytes(spark, key: str, default: str) -> int:
+    """Session conf ``key`` as a Spark byte string, ``default`` when unset
+    or without a session."""
+    return _parse_byte_string(default if spark is None else spark.conf.get(key, default))
 
 
 def probe_forest(
@@ -911,7 +912,7 @@ def probe_forest(
     again — persist/cache a lazily-built ``forest_df`` (or read it from its
     sink) before calling, or the shard builds run twice.
     """
-    _, _, prescreen = _plan_probe_regime(
+    _, prescreen = _plan_probe_regime(
         forest_df, spark, broadcast_threshold, replication_budget, sink_path
     )
     return prescreen(probe_df, key, out)
@@ -925,10 +926,9 @@ def _plan_probe_regime(
     sink_path: str | None,
 ):
     """The one regime dispatch, shared by probe_forest and
-    exact_member_forest: (regime, the Forest to broadcast — set iff the
-    regime is "broadcast", ``prescreen(df, key, out)`` — the regime's probe
-    column). The sink regimes reuse the driver's ``_sink_fingerprint`` of
-    ``sink_path``, so a plan lists its sink once.
+    exact_member_forest: (regime, ``prescreen(df, key, out)`` — the
+    regime's probe column). The sink regimes take the plan's one sink
+    handle, so a plan lists its sink once.
 
     The regime is chosen by the forest's payload bytes (sum of every row's
     payload length). A listable sink is read on the driver through the
@@ -936,18 +936,16 @@ def _plan_probe_regime(
     completes, its rows are the broadcast forest and no Spark job ran.
     Otherwise the bytes come from ``forest_payload_bytes(forest_df)``."""
     if broadcast_threshold is None:
-        broadcast_threshold = 10 * 1024 * 1024
-        if spark is not None:
-            raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-            broadcast_threshold = _parse_byte_string(raw)
+        broadcast_threshold = _conf_bytes(
+            spark, "spark.sql.autoBroadcastJoinThreshold", "10485760"
+        )
     if replication_budget is None:
         replication_budget = _replication_budget(spark)
-    listing = None if sink_path is None else _sink_listing_or_none(sink_path)
+    sink = None if sink_path is None else _sink(sink_path)
     forest = None
-    if listing is not None and broadcast_threshold >= 0:
+    if sink is not None and sink[1] is not None and broadcast_threshold >= 0:
         forest = _load_cached_from_sink(
-            sink_path, _plan_token_for(listing), (), Forest,
-            max_bytes=broadcast_threshold, listing=listing,
+            sink_path, sink[2], (), Forest, max_bytes=broadcast_threshold, listing=sink[1]
         )
     if forest is None:
         nbytes = forest_payload_bytes(forest_df)
@@ -970,22 +968,17 @@ def _plan_probe_regime(
                 return approx_contains_arrow(df, key, forest, spark, out=out)
             return approx_contains(df, key, forest, spark, out=out)
 
-        return "broadcast", forest, broadcast
-    if sink_path is not None and replication_budget >= 0 and nbytes <= replication_budget:
-        token = _plan_token_for(listing)
-        return "hybrid", None, lambda df, key, out: _approx_contains_sink(
-            df, key, sink_path, token, out
-        )
-    if sink_path is not None:
+        return "broadcast", broadcast
+    if sink is not None and replication_budget >= 0 and nbytes <= replication_budget:
+        return "hybrid", lambda df, key, out: _hybrid_probe(df, key, sink, out)
+    if sink is not None:
         # past the replication budget but sink-readable: route probes by
         # shard and let each task read only ITS shard filters (no forest
         # shuffle, no cogroup sorts)
-        return "routed", None, lambda df, key, out: _approx_contains_routed_sink(
-            df, key, sink_path, spark or df.sparkSession, out, listing
+        return "routed", lambda df, key, out: _routed_sink_probe(
+            df, key, sink, spark or df.sparkSession, out
         )
-    return "routed", None, lambda df, key, out: approx_contains_routed(
-        df, key, forest_df, out=out
-    )
+    return "routed", lambda df, key, out: approx_contains_routed(df, key, forest_df, out)
 
 
 def exact_member_forest(
@@ -1006,26 +999,15 @@ def exact_member_forest(
     ``exact_member_semi_join``, so a plain SQL ``IN`` subquery is a valid
     oracle for every regime.
 
-    Plan shapes per regime: broadcast delegates to ``exact_member_semi_join``
-    (UDF filter fused into the probe scan + ONE semi-join — no key
-    dropDuplicates shuffle); hybrid filters rows in place with the sink
-    probe then semi-joins once; routed dedups keys first so only 8-byte
-    keys cross the shard shuffle (``exact_member_routed``)."""
-    regime, forest, prescreen = _plan_probe_regime(
+    Every regime runs the one ``_exact_member`` plan: the broadcast and
+    hybrid prescreens screen the probe rows in place (no key dropDuplicates
+    shuffle, ONE semi-join); the routed ones run it keyed, so only 8-byte
+    keys cross the shard shuffle (as ``exact_member_routed``)."""
+    regime, prescreen = _plan_probe_regime(
         forest_df, spark, broadcast_threshold, replication_budget, sink_path
     )
-    if regime == "broadcast":
-        return exact_member_semi_join(
-            probe_df, probe_key, build_df, build_key, forest, spark
-        )
-    if regime == "hybrid":
-        pre = prescreen(probe_df, probe_key, "_maybe")
-        pre = pre.filter(F.col("_maybe")).drop("_maybe")
-        build_keys = build_df.select(F.col(build_key).alias(probe_key)).dropDuplicates()
-        return pre.join(build_keys, on=probe_key, how="left_semi")
-    return _exact_member_keyed(
-        probe_df, probe_key, build_df, build_key,
-        lambda keys: prescreen(keys, probe_key, "_maybe"),
+    return _exact_member(
+        probe_df, probe_key, build_df, build_key, prescreen, keyed=regime == "routed"
     )
 
 
@@ -1064,18 +1046,11 @@ def verify_sample(
     fpp}. false_negatives MUST be 0 (the hard invariant)."""
     sample = probe_df.select(F.col(probe_key).alias("key")).sample(fraction, seed=seed)
     flagged = approx_contains(sample, "key", forest, spark, out="maybe")
-    build_keys = build_df.select(F.col(build_key).alias("key")).dropDuplicates()
-    truth = flagged.join(build_keys.withColumn("is_member", F.lit(True)), on="key", how="left")
-    agg = truth.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("is_member") & ~F.col("maybe"), 1).otherwise(0)).alias("false_negatives"),
-        F.sum(F.when(F.col("maybe") & F.col("is_member").isNull(), 1).otherwise(0)).alias("false_positives"),
-        F.sum(F.when(F.col("is_member").isNull(), 1).otherwise(0)).alias("true_negatives_total"),
+    members = _build_keys(build_df, build_key, "key").withColumn("is_member", F.lit(True))
+    member, maybe = F.col("is_member").isNotNull(), F.col("maybe")
+    n, fn, fp, negatives = flagged.join(members, on="key", how="left").agg(
+        F.count("*"), F.count_if(member & ~maybe), F.count_if(~member & maybe),
+        F.count_if(~member),
     ).first()
-    n_neg = agg["true_negatives_total"]
-    return {
-        "n": agg["n"],
-        "false_negatives": agg["false_negatives"] or 0,
-        "false_positives": agg["false_positives"] or 0,
-        "fpp": (agg["false_positives"] or 0) / n_neg if n_neg else 0.0,
-    }
+    fpp = fp / negatives if negatives else 0.0
+    return {"n": n, "false_negatives": fn, "false_positives": fp, "fpp": fpp}

@@ -5,10 +5,13 @@ absorb inserts (/root/reference/README.md:50, SURVEY.md §1.1). The natural
 streaming extension of the forest model is therefore **epoch append**: each
 micro-batch builds filters over ITS OWN new keys and appends them as new
 forest rows tagged with the batch epoch; nothing is ever rewritten. A key is
-"in the stream so far" iff any epoch's filter for its shard says so — the
-same union-of-immutable-filters merge rule the batch forest uses, so batch
-and streaming forests share one probe path (``Forest`` ORs all filters that
-share a shard).
+"in the stream so far" iff any epoch's filter for its shard says so. That OR
+over epochs is ``EpochForest``'s alone: it strips the epoch tag and probes
+one ``Forest`` per epoch. A batch ``Forest`` holds one filter per shard — it
+decodes a replayed row once and refuses two different payloads for one
+shard, and every forest placement refuses an epoch sink's out-of-range
+shard ids — so probe an epoch sink with ``probe.approx_contains_epoch_sink``
+(or ``EpochForest``), or compact it into one forest first.
 
 Cost model at scale: probing k epochs costs k gathers; compaction = read the
 deduped keys of many epochs, rebuild one filter, atomically replace (the
